@@ -9,9 +9,12 @@ Routes (upstream:app.py parity):
   POST /<user_id>/ratings               -> {"accepted": n}
        body: JSON [[item_id, strength], ...]
 
-``ThreadingHTTPServer`` gives one thread per request; Spark sessions are
-thread-safe for job submission, so concurrent GETs become concurrent Spark
-jobs scheduled FIFO — same model as the reference's CherryPy front end.
+``ThreadingHTTPServer`` gives one thread per request — same model as the
+reference's CherryPy front end.  A GET runs one Spark job (the user's rows)
+and numpy on the driver when the service's generation is a snapshot, the
+full distributed plan otherwise; Spark sessions are thread-safe for job
+submission, so concurrent GETs become concurrent jobs scheduled FIFO, and
+a retrain swaps the generation under them without tearing a read.
 """
 
 from __future__ import annotations

@@ -370,6 +370,21 @@ def rec_add_ratings(spark, sf_dir):
     )
 
 
+def foldin_solve(yty, Y, r):
+    """One user's fold-in factor: the implicit-ALS normal equations against
+    frozen item factors, with the Gram trick.  ``yty`` is the rank x rank
+    Gram matrix of ALL item factors, ``Y`` the float64 factors of the items
+    the user rated (one row each) and ``r`` their strengths; ``len(r)`` is
+    the user's n_u.  The one copy of the math, shared by the distributed
+    ``foldin_factors`` and the serving layer's driver-side snapshot."""
+    import numpy as np
+
+    alpha, lam = 1.0, _ALS_PARAMS["regParam"]
+    A = yty + (Y.T * (alpha * r)) @ Y + lam * len(r) * np.eye(len(yty))
+    b = Y.T @ (1.0 + alpha * r)
+    return np.linalg.solve(A, b)
+
+
 def foldin_factors(spark, ratings, model, user_pred):
     """Solve fold-in factors for the users selected by ``user_pred`` against
     the frozen item factors of ``model`` (implicit-ALS normal equations with
@@ -379,7 +394,6 @@ def foldin_factors(spark, ratings, model, user_pred):
     import pandas as pd
 
     k = model.rank
-    alpha, lam = 1.0, _ALS_PARAMS["regParam"]
     itf = model.itemFactors  # id:int, features:array<float>
 
     def gram_parts(batches):
@@ -400,10 +414,7 @@ def foldin_factors(spark, ratings, model, user_pred):
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
         Y = np.stack(pdf["features"].to_numpy()).astype("float64")
         r = pdf["strength"].to_numpy().astype("float64")
-        n_u = len(r)
-        A = yty + (Y.T * (alpha * r)) @ Y + lam * n_u * np.eye(k)
-        b = Y.T @ (1.0 + alpha * r)
-        x = np.linalg.solve(A, b)
+        x = foldin_solve(yty, Y, r)
         return pd.DataFrame(
             {"user_id": [int(pdf["user_id"].iloc[0])], "factor": [x.tolist()]}
         )

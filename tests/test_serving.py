@@ -27,7 +27,8 @@ def test_top_ratings_unseen_and_popular(service):
         .collect()
     }
     assert not (set(items) & seen), "recommended items must be unseen"
-    popular = {r.item_id for r in service._popular.collect()}
+    gen = service._gen  # a driver snapshot at fixture scale
+    popular = set(gen.item_ids[gen.popular].tolist())
     assert set(items) <= popular, f"all recs must clear the >={MIN_AUDIENCE} gate"
     scores = [r["score"] for r in recs]
     assert scores == sorted(scores, reverse=True)
