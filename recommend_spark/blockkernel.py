@@ -169,31 +169,13 @@ LIVE_BUFFERS_PER_TILE = 4
 DEFAULT_STREAM_TILE_BYTES = 256 << 20
 
 
-_TILE_ENV_NOTED = False
-
-
 def stream_tile_budget() -> int:
     """Read DRIVER-side at plan build and closed over into the kernel udf —
     worker processes don't see env mutations made after session start, so
     the env override must be resolved before the closure ships."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_TILE_BYTES")
-    if raw is not None:
-        # r14 changed this knob's meaning from per-score-block to
-        # peak-live-set (divided by LIVE_BUFFERS_PER_TILE internally);
-        # surface that once so a value tuned under the old semantics
-        # isn't silently 4x smaller in effective tile step
-        global _TILE_ENV_NOTED
-        if not _TILE_ENV_NOTED:
-            _TILE_ENV_NOTED = True
-            print(
-                "SPARK_GRAFT_STREAM_TILE_BYTES="
-                f"{raw}: bounds the PEAK live set (score block + "
-                f"{LIVE_BUFFERS_PER_TILE} live buffers); effective "
-                f"per-buffer step is value/{LIVE_BUFFERS_PER_TILE}",
-                flush=True,
-            )
-        return int(raw)
-    return DEFAULT_STREAM_TILE_BYTES
+    return int(
+        os.environ.get("SPARK_GRAFT_STREAM_TILE_BYTES", DEFAULT_STREAM_TILE_BYTES)
+    )
 
 
 def iter_stream_tiles(ids, mat, n_candidates: int, budget_bytes: int):

@@ -96,46 +96,3 @@ def sql_md5_int(expr: str, hexdigits: int) -> str:
         f"CAST('0x' || substring(md5({expr}), 1, {hexdigits}) AS BIGINT)"
     )
 
-
-def surrogate_shuffle_keys(spark) -> bool:
-    """Session opt-in for hash-surrogate shuffle keys on string-keyed
-    exchanges (``spark.graft.surrogateShuffleKeys``, default false).
-
-    The shingle family (dedup_span_fraction, pipeline_bpe_pairs,
-    text_bigram_surprisal) shuffles corpus-scale streams keyed on raw
-    n-gram STRINGS (~30-60 B each) that never reach the output; with the
-    flag on, those keys are replaced by a 96-bit two-column surrogate
-    (``surrogate_key_pair``) right after shingling, so every exchange
-    and join moves 16 fixed bytes per key (two BIGINT columns) instead.
-    Default OFF: on this
-    single-node loopback box shuffle "network" is memory and CPU is the
-    scarce resource, so the hash cost only pays off where exchanges
-    cross a real network or spill (measured both ways at sf1 —
-    tools/scaleup_r10_surrogate.json; an md5-based 120-bit variant was
-    measured first and rejected: 0.86x bytes for 1.96x wall).  Flag-on
-    is value-identical (the keys are internal — proven by the parity
-    tests in tests/test_surrogate_keys.py) up to surrogate collisions:
-    at 10^10 distinct shingles the 96-bit birthday bound is ~6e-10.
-    """
-    return (
-        str(spark.conf.get("spark.graft.surrogateShuffleKeys", "false")).lower()
-        == "true"
-    )
-
-
-def surrogate_key_pair(col: Column | str) -> tuple[Column, Column]:
-    """96-bit-entropy surrogate key: (xxhash64, crc32) of the string.
-
-    Two BIGINT columns — 16 B per key on the wire (crc32 carries 32 bits
-    of entropy but serializes as a long).
-
-    Companion of ``surrogate_shuffle_keys``.  Two INDEPENDENT JVM-native
-    hash passes (a two-arg xxhash64(s, lit) is NOT independent — Spark
-    folds extra columns through the running hash, so the second value is
-    a pure function of the first); xxhash64+crc32 differ structurally,
-    giving the pair its full 96 bits: birthday bound ~(n^2)/2^97, i.e.
-    ~6e-10 at 10^10 distinct keys.  Chosen over an md5-split 120-bit
-    variant on measurement: md5 is a crypto hash and cost 1.96x wall at
-    sf1 for the same byte saving (tools/scaleup_r10_surrogate.json)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.xxhash64(c), F.crc32(c.cast("binary")).cast("long"))

@@ -86,6 +86,15 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame
 #: under any sane executor, well over every fixture dimension.
 BROADCAST_HINT_BUDGET = 64 << 20
 
+#: Residual edge count at which an iterative graph kernel stops paying
+#: checkpointed distributed rounds and finishes its fixpoint exactly in
+#: ONE vectorized task: the residual fits one task (two int64 arrays,
+#: ~80 MB at 5M edges).  Shared by the connected-components loop
+#: (``dedup._cc_components``) and ``recommender.kcore_peel``; both read
+#: it at call time, so tests force the deep-distributed path by patching
+#: this attribute.
+LOCAL_ENDGAME_EDGES = 5_000_000
+
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count from the parquet FOOTER — metadata only, no Spark job."""

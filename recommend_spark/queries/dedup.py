@@ -15,9 +15,10 @@ Five dedup families, each with the shape that survives 100 TB:
 
 from __future__ import annotations
 
-import os
+import logging
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError
 from pyspark.sql import Window as W
 
 from ..blockkernel import (
@@ -27,6 +28,8 @@ from ..blockkernel import (
 )
 from ..io import hint_if, load_table, sf_key, table_file_bytes
 from ..registry import register
+
+log = logging.getLogger(__name__)
 
 _SQL_TOKS = "list_distinct(string_split(lower(text), ' '))"
 _JACCARD_TAU = 0.8
@@ -343,10 +346,8 @@ _CONTAIN_MIN_TOKENS = 10
 # at a mild replica ratio they cost more than the (1 - ratio^2) kernel
 # reduction saves (measured sf0.1, ~0.8 ratio: collapse 2.78 s vs direct
 # 1.89 s noop min-of-3) while at heavy replication the kernel shrinks
-# quadratically.  Override for cluster corpora via env.
-_CONTAIN_COLLAPSE_RATIO = float(
-    os.environ.get("SPARK_GRAFT_CONTAIN_COLLAPSE_RATIO", "0.5")
-)
+# quadratically.
+_CONTAIN_COLLAPSE_RATIO = 0.5
 
 
 @register(
@@ -1269,36 +1270,16 @@ def _cc_min_local(e):
 #: byte budget).  The map's row count is bounded by the CURRENT edge
 #: count (every mapped node appears as a src in the doubled edge set), so
 #: the gate needs no extra counting job — the loop already counts edges.
-#: Override for tests / small executors via the env var.
+#: Row-based rather than ``hint_if``'s byte budget: at sf0.1 the round-1
+#: map is 5.9M rows, which 16 B/row against 64 MiB would un-hint.
 _CC_BROADCAST_MAX_MAP_ROWS = 8_000_000
 #: Target rows per partition for the contraction loop's checkpointed
 #: tables (labels/edges are 2-3 longs/row; 2M rows ≈ tens of MB a task).
 _CC_ROWS_PER_PARTITION = 2_000_000
-#: Residual edge count below which the contraction loop finishes the
-#: closure in ONE vectorized task (_cc_min_local) instead of paying 3
-#: checkpointed jobs per remaining distributed round.  Env-overridable so
-#: tests and scale surrogates can force the deep-distributed path that
-#: the fixture (residual ≈ 3.6k edges after round 1) never reaches.
-_CC_LOCAL_THRESHOLD = 5_000_000
-
-
-def _cc_local_threshold() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_LOCAL_THRESHOLD", _CC_LOCAL_THRESHOLD)
-    )
 
 
 def _cc_map_broadcastable(n_edges: int) -> bool:
-    import os
-
-    budget = int(
-        os.environ.get(
-            "SPARK_GRAFT_CC_BROADCAST_MAX_MAP_ROWS", _CC_BROADCAST_MAX_MAP_ROWS
-        )
-    )
-    return n_edges <= budget
+    return n_edges <= _CC_BROADCAST_MAX_MAP_ROWS
 
 
 def _cc_width(n_rows: int) -> int:
@@ -1307,6 +1288,9 @@ def _cc_width(n_rows: int) -> int:
     thousands of rows but serializes a billion-row round-1 map on 4
     tasks.  Clamped to [4, 256]."""
     return max(4, min(256, -(-n_rows // _CC_ROWS_PER_PARTITION)))
+
+
+_STATS_RESET_WARNED = False
 
 
 def _cc_checkpoint(df):
@@ -1328,12 +1312,41 @@ def _cc_checkpoint(df):
     back to the flat per-table default; with stats reset per round the
     same loop holds 19 digits forever at ~0.55 s/round.  No partitioning
     metadata is lost: every call site checkpoints behind a
-    ``coalesce``, which already erases output-partitioning info.  All
-    loop joins that matter are explicitly hinted, so planner choices do
-    not depend on the dropped estimates (pinned by tests/test_r11/r15)."""
+    ``coalesce``, which already erases output-partitioning info.
+
+    Invariant for callers: every join on this function's output must
+    carry its own size-gated hint.  The reset stats read as the flat
+    per-table default, which is above autoBroadcastJoinThreshold, so the
+    planner never broadcasts such a side on its own.  That is why the
+    reset stays CC-only: applied to the un-hinted pagerank/BFS loops it
+    turned their broadcast joins into sort-merge joins (graph_pagerank
+    BHJ 19 → 12, min wall 1.385 → 1.644 s at sf0.01).  Pinned by
+    tests/test_r11/r15.
+
+    The rebuild goes through Spark-private API (``pyspark.sql.classic``,
+    ``internalCreateDataFrame``).  If either is gone the loop falls back
+    to the plain ``localCheckpoint`` with one WARNING: same labels, only
+    a very deep distributed run would then hit the stats growth."""
+    ck = df.localCheckpoint()
+    try:
+        return _drop_inherited_stats(ck)
+    except (ImportError, AttributeError, Py4JError) as exc:
+        global _STATS_RESET_WARNED
+        if not _STATS_RESET_WARNED:
+            _STATS_RESET_WARNED = True
+            log.warning(
+                "CC checkpoint stats reset unavailable (%s: %s); "
+                "using plain localCheckpoint",
+                type(exc).__name__,
+                exc,
+            )
+        return ck
+
+
+def _drop_inherited_stats(ck):
+    """Rebuild a checkpointed DataFrame on its own InternalRow RDD."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-    ck = df.localCheckpoint()
     jdf = ck._jdf
     spark = ck.sparkSession
     j = spark._jsparkSession.internalCreateDataFrame(
@@ -1418,7 +1431,7 @@ def _cc_star_pair(e, width: int):
     neighborhood minimum, collapsing component height geometrically:
     measured on planted chains, a 4096-node path needs 4095
     contraction-only rounds vs 12 with the pair interleaved, with
-    identical labels (tools/scaleup_r15_cc.py).
+    identical labels (tools/scaleup_r15_cc.py at commit e0718c1).
 
     Both ops preserve component structure exactly (paper lemmas 1-2):
     large-star links every above-self neighbor v > u to
@@ -1503,14 +1516,15 @@ def _cc_components(pairs):
     # coalescing shrinks every loop shuffle to a handful of tasks on its
     # own, so no session-global shuffle.partitions mutation is needed
     # (the old set/restore raced under concurrent queries on one session).
+    from ..io import LOCAL_ENDGAME_EDGES
+
     e = edges
-    local_threshold = _cc_local_threshold()
     while n > 0:
         rep, e = _cc_round(e, rep, n, rep_width)
         n = e.count()
         if n == 0:
             break
-        if n <= local_threshold:
+        if n <= LOCAL_ENDGAME_EDGES:
             # residual fits one task: finish the closure exactly with
             # union-find (min-id roots) instead of paying 3 checkpointed
             # jobs per remaining round (measured: rounds 2-4 moved 3,618
@@ -1518,7 +1532,7 @@ def _cc_components(pairs):
             # A residual above the threshold keeps contracting
             # distributed — the same contract as kcore_peel.  fm holds
             # up to 2×|edges| rows, which can EXCEED the map-broadcast
-            # row budget (2×5M > 8M default), so the hint obeys the same
+            # row budget (2×5M > 8M), so the hint obeys the same
             # gate as every other broadcast in this loop instead of the
             # old unconditional hint the budget couldn't reach.
             fm = _cc_min_local(e)
@@ -2066,15 +2080,11 @@ def dedup_span_fraction(spark, sf_dir):
     vocabulary broadcast, no quadratic pair set.  The fraction is one
     long/long double division — hash-exact.
 
-    Both exchanges key on the raw 5-gram STRING; with
-    ``spark.graft.surrogateShuffleKeys=true`` (canon.py) the shingle is
-    replaced by a 96-bit (xxhash64, crc32) surrogate right after the explode,
-    so the shuffles move 16 B/key (two longs) instead of the ~30-60 B n-gram text —
-    value-identical output (the key never reaches it; parity test in
-    tests/test_surrogate_keys.py, bytes/wall delta in
-    tools/scaleup_r10_surrogate.json)."""
-    from ..canon import surrogate_key_pair, surrogate_shuffle_keys
-
+    Both exchanges key on the raw 5-gram STRING.  A 96-bit (xxhash64,
+    crc32) two-long surrogate key moves 0.675x the shuffle bytes at 0.959x
+    wall at sf1 (tools/surrogate_ab.py and tools/scaleup_r10_surrogate.json
+    at commit e0718c1): the lever to pull once these exchanges cross a
+    real network."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", F.split(F.lower("text"), " ").alias("w"))
@@ -2094,14 +2104,8 @@ def dedup_span_fraction(spark, sf_dir):
             )
         ).alias("s"),
     )
-    if surrogate_shuffle_keys(spark):
-        k1, k2 = surrogate_key_pair("s")
-        sh = sh.select("doc_id", k1.alias("s1"), k2.alias("s2"))
-        key = ["s1", "s2"]
-    else:
-        key = ["s"]
-    collapsed = sh.groupBy(*key, "doc_id").agg(F.count("*").alias("pc"))
-    ndocs = F.count("*").over(W.partitionBy(*key))
+    collapsed = sh.groupBy("s", "doc_id").agg(F.count("*").alias("pc"))
+    ndocs = F.count("*").over(W.partitionBy("s"))
     return (
         collapsed.withColumn("ndocs", ndocs)
         .groupBy("doc_id")

@@ -467,12 +467,9 @@ def pipeline_bpe_pairs(spark, sf_dir):
     over the VOCAB (corpus-size-free) → |alphabet|² pair counts; the
     top-20 is a total-ordered limit over that tiny table.  The pair
     stage's countDistinct(word) expands the word STRING into its
-    distinct-state shuffle; with ``spark.graft.surrogateShuffleKeys=true``
-    (canon.py) the expansion carries the 96-bit (xxhash64, crc32) surrogate
-    instead — value-identical counts (parity test in
-    tests/test_surrogate_keys.py)."""
-    from ..canon import surrogate_key_pair, surrogate_shuffle_keys
-
+    distinct-state shuffle; a 16 B hash surrogate measured 1.0x the
+    shuffle bytes at sf1 (the state collapses map-side at vocab scale),
+    tools/scaleup_r10_surrogate.json at commit e0718c1."""
     d = load_table(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
@@ -485,27 +482,20 @@ def pipeline_bpe_pairs(spark, sf_dir):
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    if surrogate_shuffle_keys(spark):
-        w1, w2 = surrogate_key_pair("word")
-        words = words.withColumn("w1", w1).withColumn("w2", w2)
-        carry = ["w1", "w2"]  # distinct-state key: 16 B, not the string
-    else:
-        carry = ["word"]
     pairs = words.select(
         "word",
         "cnt",
-        *[c for c in carry if c != "word"],
         F.explode(F.sequence(F.lit(1), F.length("word") - 1)).alias("i"),
     ).select(
         F.col("word").substr(F.col("i"), F.lit(2)).alias("pair"),
         "cnt",
-        *carry,
+        "word",
     )
     return (
         pairs.groupBy("pair")
         .agg(
             F.sum("cnt").cast("long").alias("pair_count"),
-            F.countDistinct(*carry).cast("long").alias("n_words"),
+            F.countDistinct("word").cast("long").alias("n_words"),
         )
         .orderBy(F.col("pair_count").desc(), "pair")
         .limit(20)

@@ -2020,13 +2020,13 @@ def rec_eval_replay(spark, sf_dir):
     )
 
 
-def kcore_peel(edges, k: int, rounds: int, local_threshold: int = 5_000_000):
+def kcore_peel(edges, k: int, rounds: int):
     """k-core peeling over a symmetric edge list (src, dst) to the TRUE
     fixpoint: distributed synchronous rounds strip the mass periphery
     (each round = one degree aggregate + two semi joins, checkpointed
     eagerly per the iterative-fixpoint contract, early-exiting on an
     unchanged edge count), and once the surviving edge set fits a single
-    task (``local_threshold`` edges) the remaining cascade finishes
+    task (``io.LOCAL_ENDGAME_EDGES``) the remaining cascade finishes
     EXACTLY inside one mapInPandas partition — no driver collect, no
     round budget.
 
@@ -2038,12 +2038,14 @@ def kcore_peel(edges, k: int, rounds: int, local_threshold: int = 5_000_000):
     round or two the frontier has collapsed by orders of magnitude; at
     that size the exact single-task fixpoint costs one narrow job.  At
     100 TB the distributed rounds bound per-round work by the shrinking
-    edge set, and a residual above ``local_threshold`` keeps taking
+    edge set, and a residual above the endgame bound keeps taking
     distributed rounds (``rounds`` caps them; callers size it to the
     measured depth of the periphery, not the full cascade).  Pure
     kernel — planted-graph tests (tests/test_ml_quality.py) exercise
-    both phases via ``local_threshold``."""
+    both phases by patching ``io.LOCAL_ENDGAME_EDGES``."""
     import pandas as pd
+
+    from ..io import LOCAL_ENDGAME_EDGES
 
     def _local_fixpoint(iterator):
         # exact cascade on the residual in one task, fully vectorized:
@@ -2087,7 +2089,7 @@ def kcore_peel(edges, k: int, rounds: int, local_threshold: int = 5_000_000):
         if n == prev_n:
             return cur  # synchronous fixpoint reached
         prev_n = n
-        if n <= local_threshold:
+        if n <= LOCAL_ENDGAME_EDGES:
             return cur.coalesce(1).mapInPandas(
                 _local_fixpoint, schema="src long, dst long"
             )

@@ -1513,14 +1513,10 @@ def text_bigram_surprisal(spark, sf_dir):
     across libm builds), per-document totals are exact decimal sums.  One
     doc_id-keyed window shuffle forms bigrams, the frequency table is
     vocabulary²-bounded-by-corpus and broadcasts back onto the stream.
-    The frequency aggregate keys on the raw bigram STRING; with
-    ``spark.graft.surrogateShuffleKeys=true`` (canon.py) the bigram is
-    swapped for the 96-bit (xxhash64, crc32) surrogate right after the window
-    — the freq exchange, the broadcast table, and the join probe all move
-    16 B/key (parity test in tests/test_surrogate_keys.py)."""
+    The frequency aggregate keys on the raw bigram STRING: a 16 B hash
+    surrogate measured 1.0x the shuffle bytes at sf1 (bigrams are ~13 B),
+    tools/scaleup_r10_surrogate.json at commit e0718c1."""
     from pyspark.sql import Window as W
-
-    from ..canon import surrogate_key_pair, surrogate_shuffle_keys
 
     docs = load_table(spark, sf_dir, "documents")
     tok = _tokens(docs)
@@ -1534,13 +1530,7 @@ def text_bigram_surprisal(spark, sf_dir):
         )
         .filter(F.col("b").isNotNull())
     )
-    if surrogate_shuffle_keys(spark):
-        b1, b2 = surrogate_key_pair("b")
-        bgf = bgf.select("doc_id", b1.alias("b1"), b2.alias("b2"))
-        key = ["b1", "b2"]
-    else:
-        key = ["b"]
-    freq = bgf.groupBy(*key).agg(F.count("*").alias("c"))
+    freq = bgf.groupBy("b").agg(F.count("*").alias("c"))
     tot = freq.agg(F.sum("c").alias("t"))
     surp = (
         freq.crossJoin(F.broadcast(tot))
@@ -1549,10 +1539,10 @@ def text_bigram_surprisal(spark, sf_dir):
             (-F.log(F.col("c").cast("double") / F.col("t")))
             .cast("decimal(18,6)"),
         )
-        .select(*key, "s")
+        .select("b", "s")
     )
     return (
-        bgf.join(hint_if(surp, table_file_bytes(sf_dir, "documents") * 8), key)
+        bgf.join(hint_if(surp, table_file_bytes(sf_dir, "documents") * 8), "b")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),

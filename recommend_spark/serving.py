@@ -75,6 +75,19 @@ def _merge(base: DataFrame, extra_rows: Rows) -> DataFrame:
     )
 
 
+def _write_rows(spark: SparkSession, rows: Rows, path: str) -> None:
+    spark.createDataFrame(
+        rows, "user_id int, item_id int, strength double"
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _read_rows(spark: SparkSession, path: str) -> Rows:
+    return [
+        (r["user_id"], r["item_id"], r["strength"])
+        for r in spark.read.parquet(path).collect()
+    ]
+
+
 def _popular(ratings: DataFrame) -> DataFrame:
     return (
         ratings.groupBy("item_id")
@@ -266,11 +279,13 @@ class RecommendationService:
         ratings = _ratings(spark, sf_dir).cache()
         self._start(spark, sf_dir, _generation(ratings, _train(ratings)), [])
 
-    def _start(self, spark, sf_dir, gen, extra_rows: Rows) -> None:
+    def _start(self, spark, sf_dir, gen, extra_rows: Rows, merged: Rows = ()) -> None:
         self.spark = spark
         self.sf_dir = sf_dir
         self._gen = gen
         self._extra_rows = extra_rows
+        # the log rows retrains folded into gen's base, beyond the corpus
+        self._merged = list(merged)
         # ThreadingHTTPServer serves each request on its own thread: the
         # generation and the append log change together (retrain swaps one
         # and trims the other), so every reader takes both under this lock
@@ -281,7 +296,8 @@ class RecommendationService:
     # -- persistence (warm-start) ------------------------------------------
 
     def save(self, path: str) -> None:
-        """Persist the trained ALS model + the append log.
+        """Persist the trained ALS model, the rows retrains merged into the
+        base ratings, and the append log.
 
         The upstream lifecycle refits at every boot (its engine holds the
         model only in memory); a real deployment wants the nightly-retrain
@@ -289,16 +305,15 @@ class RecommendationService:
         request in seconds, not after a full ALS fit.  Uses MLlib's own
         ``ALSModel`` writer (factors as parquet + params as JSON) — the
         factors are distributed DataFrames, so save/load never funnels
-        them through the driver.  The append log rides along as parquet
-        so pending fold-in state survives the restart too."""
+        them through the driver.  The merged rows and the append log ride
+        along as parquet, so the restarted base holds what the model was
+        trained on and pending fold-in state survives too."""
         base = path.rstrip("/")
-        gen, extra = self._state()
+        with self._extra_lock:
+            gen, merged, extra = self._gen, list(self._merged), list(self._extra_rows)
         gen.model.write().overwrite().save(base + "/als_model")
-        self.spark.createDataFrame(
-            extra, "user_id int, item_id int, strength double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            base + "/extra_ratings.parquet"
-        )
+        _write_rows(self.spark, merged, base + "/merged_ratings.parquet")
+        _write_rows(self.spark, extra, base + "/extra_ratings.parquet")
 
     @classmethod
     def load(
@@ -306,18 +321,17 @@ class RecommendationService:
     ) -> "RecommendationService":
         """Warm-start a service from ``save()`` output: no ALS refit —
         the model's factor DataFrames load straight from parquet, and the
-        serving generation re-derives from them + the corpus ratings."""
+        serving generation re-derives from them + the corpus ratings with
+        the saved merged rows folded back in."""
         from pyspark.ml.recommendation import ALSModel
 
         base = path.rstrip("/")
-        extra = [
-            (r["user_id"], r["item_id"], r["strength"])
-            for r in spark.read.parquet(base + "/extra_ratings.parquet").collect()
-        ]
-        ratings = _ratings(spark, sf_dir).cache()
+        merged = _read_rows(spark, base + "/merged_ratings.parquet")
+        extra = _read_rows(spark, base + "/extra_ratings.parquet")
+        ratings = _merge(_ratings(spark, sf_dir), merged).cache()
         gen = _generation(ratings, ALSModel.load(base + "/als_model"))
         svc = cls.__new__(cls)
-        svc._start(spark, sf_dir, gen, extra)
+        svc._start(spark, sf_dir, gen, extra, merged)
         return svc
 
     def retrain(self) -> None:
@@ -334,6 +348,7 @@ class RecommendationService:
             gen = _generation(ratings, _train(ratings))
             with self._extra_lock:
                 self._gen = gen
+                self._merged += merged
                 del self._extra_rows[: len(merged)]  # the log only grows
             old.unpersist()
             if old.ratings is not ratings:

@@ -118,7 +118,7 @@ def run_stream(
     # micro-batch is small, so fewer state partitions means fewer
     # task-launch + state-commit overheads per batch (batches × width).
     # On a real cluster size this to peak key cardinality instead
-    # (override: SPARK_GRAFT_STREAM_STATE_WIDTH).
+    # (the ``state_width`` argument).
     # r14 interleaved A/B (min-of-3, results bit-identical across widths):
     # JVM-state replays want width 2 — per-batch state commits scale with
     # width and dominate these tiny micro-batches (stream_stream_join
@@ -127,16 +127,17 @@ def run_stream(
     # applyInPandasWithState ops want width 8 (Python-worker parallelism
     # beats commit savings: stateful_count 3.70 vs 6.29 at width 2,
     # session_ttl 4.49 vs 8.40); those pass ``state_width=8`` explicitly.
+    # A later same-session A/B reconfirmed width 2 (tools/ab_r15_width.py
+    # and its .json record at commit e0718c1).
     # acquire and set/restore are ALL inside one try/finally: an exception
     # while building the readStream must not leak the lock (every later
     # replay would block forever) or the width conf (every later batch
     # query would shuffle at replay width)
-    width = os.environ.get("SPARK_GRAFT_STREAM_STATE_WIDTH") or state_width
     _REPLAY_LOCK.acquire()
     prev_parts = None
     try:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_width))
     # 4 files per micro-batch: still a genuine multi-batch execution (2
     # batches over 8 chunks — state carried across the batch boundary,
     # watermark advances batch-to-batch) at a quarter of the per-batch

@@ -821,30 +821,33 @@ def test_mmr_kernel_tie_keeps_higher_relevance():
     assert [i for i, _ in sel] == [0, 1, 2]
 
 
-def test_kcore_peel_planted_k4_plus_chain(spark):
+def test_kcore_peel_planted_k4_plus_chain(spark, monkeypatch):
     """K4 with a pendant chain hanging off it: the 3-core must be exactly
     the K4, and the chain must peel by CASCADE (5 falls first, then 6
     has degree 1, then 7) — a single non-iterated degree filter would
     leave 5 in place (initial degree 2... below 3 — so the cascade test
     is the chain under k=2 below)."""
+    import recommend_spark.io as io
     from recommend_spark.queries.recommender import kcore_peel
 
     k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a != b]
     chain = [(4, 5), (5, 4), (5, 6), (6, 5), (6, 7), (7, 6)]
     edges = spark.createDataFrame(k4 + chain, "src long, dst long")
-    # local_threshold=0 forces the distributed synchronous rounds;
+    # an endgame bound of 0 forces the distributed synchronous rounds;
     # the default goes through the single-task residual fixpoint —
     # both phases must produce the identical core
     for thr in (0, 5_000_000):
-        core = kcore_peel(edges, k=3, rounds=6, local_threshold=thr)
+        monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", thr)
+        core = kcore_peel(edges, k=3, rounds=6)
         nodes = {r["src"] for r in core.select("src").distinct().collect()}
         assert nodes == {1, 2, 3, 4}, f"threshold={thr}"
 
 
-def test_kcore_peel_cascade_strips_chain_keeps_cycle(spark):
+def test_kcore_peel_cascade_strips_chain_keeps_cycle(spark, monkeypatch):
     """Cycle 1-2-3-4-1 with chain 4-5-6-7: under k=2 the chain end (7,
     degree 1) peels first, which drops 6 to degree 1, then 5 — three
     cascade rounds — while the cycle survives untouched."""
+    import recommend_spark.io as io
     from recommend_spark.queries.recommender import kcore_peel
 
     cyc = [(1, 2), (2, 3), (3, 4), (4, 1)]
@@ -853,7 +856,8 @@ def test_kcore_peel_cascade_strips_chain_keeps_cycle(spark):
     chain = chain + [(b, a) for a, b in chain]
     edges = spark.createDataFrame(cyc + chain, "src long, dst long")
     for thr in (0, 5_000_000):
-        core = kcore_peel(edges, k=2, rounds=6, local_threshold=thr)
+        monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", thr)
+        core = kcore_peel(edges, k=2, rounds=6)
         nodes = {r["src"] for r in core.select("src").distinct().collect()}
         assert nodes == {1, 2, 3, 4}, f"threshold={thr}"
 

@@ -79,8 +79,9 @@ def test_kcore_local_fixpoint_dedupes_and_converges(spark):
     und = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
     sym = und + [(b, a) for a, b in und] + [(1, 2), (2, 1)]  # dup rows
     df = spark.createDataFrame(sym, "src long, dst long")
-    # huge threshold forces the single-task local fixpoint immediately
-    core = kcore_peel(df, k=2, rounds=6, local_threshold=10_000)
+    # 18 edges sit far under the endgame bound, so the single-task local
+    # fixpoint runs immediately
+    core = kcore_peel(df, k=2, rounds=6)
     got = {(r["src"], r["dst"]) for r in core.collect()}
     clique = {(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a != b}
     assert got == clique

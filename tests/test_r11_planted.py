@@ -13,18 +13,17 @@ coalesce(4).  These tests pin both halves of that contract:
   plans BroadcastHashJoins (the hint is real), and over the budget plans
   NO broadcast join and carries NO hint (AQE owns the decision);
 * value: dedup_cluster's output is row-identical with the gate forced
-  off (budget=0 env override) — the hint is a pure physical lever.
+  off (budget patched to 0) — the hint is a pure physical lever.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+import recommend_spark.queries.dedup as dd
 from recommend_spark.queries import QUERIES
 from recommend_spark.queries.dedup import _cc_round, _cc_width
 from tests.conftest import SF_DIR
-
-_GATE_ENV = "SPARK_GRAFT_CC_BROADCAST_MAX_MAP_ROWS"
 
 
 def _fixture_graph(spark):
@@ -103,7 +102,7 @@ def test_cc_width_derives_from_edge_count():
 
 def test_dedup_cluster_value_identical_with_gate_forced_off(spark, monkeypatch):
     base = sorted(map(tuple, QUERIES["dedup_cluster"](spark, SF_DIR).collect()))
-    monkeypatch.setenv(_GATE_ENV, "0")
+    monkeypatch.setattr(dd, "_CC_BROADCAST_MAX_MAP_ROWS", 0)
     gated = sorted(map(tuple, QUERIES["dedup_cluster"](spark, SF_DIR).collect()))
     assert gated == base
     assert len(base) > 0

@@ -6,25 +6,30 @@ node per round on a path component — O(diameter) rounds on a high-diameter
 the killer.  r15 interleaves one Kiveris et al. large-star/small-star pair
 per deep-residual round (_cc_star_pair), bounding the rounds
 polylogarithmically.  The fixture never reaches the deep path (residual
-3.6k edges << 5M threshold), so these tests force it with the
-SPARK_GRAFT_CC_LOCAL_THRESHOLD override and pin three things:
+3.6k edges << 5M threshold), so these tests force it by patching
+io.LOCAL_ENDGAME_EDGES to 0 and pin three things:
 
 * value: _cc_star_pair preserves component structure exactly on planted
   graphs (chain / star / clique / forest) — same components in, same out;
 * rounds: a planted deep chain converges in O(log n) contraction rounds
   with the pair interleaved (the old loop needed n-1);
 * equivalence: the deep-distributed path and the local-endgame path label
-  a mixed planted graph identically, and labels are the component min.
+  a mixed planted graph identically, and labels are the component min;
+* drift: with the stats-reset's private Spark API gone, the loop falls
+  back to plain localCheckpoint, logs one WARNING and labels identically.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import logging
 
+import pyspark.sql.functions as F
+import pytest
+from py4j.protocol import Py4JError
+
+import recommend_spark.io as io
 import recommend_spark.queries.dedup as dd
 from recommend_spark.queries.dedup import _cc_components, _cc_star_pair
-
-_THRESH_ENV = "SPARK_GRAFT_CC_LOCAL_THRESHOLD"
 
 
 def _doubled(spark, pairs):
@@ -102,7 +107,7 @@ def test_cc_checkpoint_resets_catalyst_stats(spark):
 def test_cc_components_deep_chain_round_count(spark, monkeypatch):
     # force the deep-distributed path on a 256-node chain and count
     # contraction rounds: old loop = 255, star-interleaved must be O(log n)
-    monkeypatch.setenv(_THRESH_ENV, "0")
+    monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
     calls = {"rounds": 0}
     real_round = dd._cc_round
 
@@ -126,10 +131,44 @@ def test_cc_components_deep_path_matches_endgame_path(spark, monkeypatch):
     )
     pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     rep_endgame, _ = _cc_components(pdf)  # default threshold: local endgame
-    monkeypatch.setenv(_THRESH_ENV, "0")
+    monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
     rep_deep, _ = _cc_components(pdf)  # deep path: stars + contraction only
     a = sorted(map(tuple, rep_endgame.collect()))
     b = sorted(map(tuple, rep_deep.collect()))
     assert a == b
     truth = _true_components(pairs)
     assert dict(a) == truth
+
+
+@pytest.mark.parametrize(
+    "drift",
+    [
+        ImportError("No module named 'pyspark.sql.classic'"),
+        Py4JError("Method internalCreateDataFrame([...]) does not exist"),
+    ],
+    ids=["no_classic_module", "no_internalCreateDataFrame"],
+)
+def test_cc_checkpoint_falls_back_on_private_api_drift(
+    spark, monkeypatch, caplog, drift
+):
+    # every planted shape in one graph (forest shifted off the chain's ids)
+    forest = [(a + 1000, b + 1000) for a, b in PLANTED["forest"]]
+    pairs = PLANTED["chain"] + PLANTED["star"] + PLANTED["clique"] + forest
+    pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    ref = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+
+    def broken(ck):
+        raise drift
+
+    monkeypatch.setattr(dd, "_drop_inherited_stats", broken)
+    monkeypatch.setattr(dd, "_STATS_RESET_WARNED", False)
+    with caplog.at_level(logging.WARNING, logger=dd.__name__):
+        endgame = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+        monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
+        deep = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+    assert endgame == ref
+    assert deep == ref
+    assert dict(ref) == _true_components(pairs)
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1, warnings
+    assert type(drift).__name__ in warnings[0].getMessage()

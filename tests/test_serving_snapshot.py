@@ -70,6 +70,12 @@ def assert_top_parity(svc, users, what: str) -> None:
     assert_same(got, want, users, what)
 
 
+def top_all(svc, users) -> dict:
+    """``svc.top_ratings(u, 10)`` for every user, in one batched read."""
+    gen, extra = svc._state()
+    return gen.top(extra, users, 10)
+
+
 def jobs_of(spark, call) -> int:
     sc = spark.sparkContext
     group = f"serving-{uuid.uuid4().hex}"
@@ -132,6 +138,13 @@ def test_snapshot_matches_distributed_across_states(spark, fresh, users, tmp_pat
     warm = RecommendationService.load(spark, SF_DIR, str(tmp_path / "model"))
     assert warm.pending_foldin_backlog == 1
     assert_top_parity(warm, pending, "after save/load")
+    # the warm start serves what the saved service served: the rows the
+    # retrain merged (NEW_USER's among them) survive the restart
+    want, got = top_all(svc, pending), top_all(warm, pending)
+    assert want.get(NEW_USER), "NEW_USER is served before the restart"
+    assert_same(got, want, pending, "warm vs saved")
+    for u in (NEW_USER, users[1]):
+        assert_same({u: warm.top_ratings(u, 10)}, {u: svc.top_ratings(u, 10)}, [u], "route")
 
 
 def test_budget_overflow_falls_back_to_distributed(
