@@ -416,6 +416,57 @@ def _score_bitset_blocks(
         )
 
 
+def bitset_gemm_pairs_within_budget(
+    stream_df,
+    index_df,
+    vocab_map,
+    *,
+    n_index,
+    n_index_toks,
+    metric,
+    tau,
+    exclude_self=False,
+):
+    """The bitset GEMM kernel on whichever path the staging budget allows:
+    ``bitset_gemm_pairs`` when the index side fits on the driver,
+    ``bitset_gemm_pairs_bucketed`` otherwise.
+
+    Both driver-side footprints are gated: the f32 incidence matrix
+    (``n_index`` × |V| × 4) AND the Python-object cost of collecting the
+    (id, nt, toks) rows it is built from (``collected_toks_bytes`` of
+    ``n_index`` rows holding ``n_index_toks`` tokens), which exceeds the
+    matrix by 10-100x at small vocabularies.  B derives from the LARGER
+    footprint: the fallback fires precisely when the token-list bytes blow
+    the budget, so sizing from the matrix alone could pick B=2 and hand
+    each cogroup cell a block far over budget.
+
+    ``index_df`` has the stream side's columns (id long, nt long, toks
+    array<string>); the output contract is ``bitset_gemm_pairs``'."""
+    budget = max_staged_bytes()
+    need = max(
+        n_index * len(vocab_map) * 4, collected_toks_bytes(n_index, n_index_toks)
+    )
+    if need <= budget:
+        index_rows = [(r["id"], r["nt"], r["toks"]) for r in index_df.collect()]
+        return bitset_gemm_pairs(
+            stream_df,
+            index_rows,
+            vocab_map,
+            metric=metric,
+            tau=tau,
+            exclude_self=exclude_self,
+        )
+    return bitset_gemm_pairs_bucketed(
+        stream_df,
+        index_df,
+        vocab_map,
+        metric=metric,
+        tau=tau,
+        exclude_self=exclude_self,
+        n_buckets=max(2, min(MAX_BUCKETS, -(-need // budget))),
+    )
+
+
 def bitset_gemm_pairs_bucketed(
     stream_df,
     index_df,

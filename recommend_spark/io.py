@@ -8,13 +8,17 @@ gives predicate pushdown, column pruning and row-group skipping for free.
 
 from __future__ import annotations
 
+import logging
 import os
 from pathlib import Path
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import ensure_runtime_confs
+
+log = logging.getLogger(__name__)
 
 # Root for materialized fixtures / memo caches / streaming checkpoints.
 # Env-overridable; defaults to <repo>/.artifacts derived from this file's
@@ -76,10 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
-
-
 #: Budget for an EXPLICIT broadcast hint (a forced hint bypasses both the
 #: static autoBroadcastJoinThreshold and AQE, so it must never be pinned
 #: to a side that can outgrow executor memory).  64 MiB estimated: well
@@ -94,6 +94,75 @@ BROADCAST_HINT_BUDGET = 64 << 20
 #: it at call time, so tests force the deep-distributed path by patching
 #: this attribute.
 LOCAL_ENDGAME_EDGES = 5_000_000
+
+_PRIVATE_API_WARNED = False
+
+
+def checkpoint(df: DataFrame, *, reset_stats: bool = False) -> tuple[DataFrame, int]:
+    """Materialize ``df`` once and return ``(materialized, row_count)``,
+    the count taken by the same job that materializes it.
+
+    The one materialization point of the iterative graph loops
+    (connected components, pagerank, label propagation, BFS, k-core):
+    each round cuts its lineage here so the next round plans against
+    stored blocks, and loops that stop on a size read it from the
+    return value instead of paying a second ``count()`` job.  An eager
+    ``localCheckpoint()`` counts its rows internally and discards the
+    number; here a lazy checkpoint is materialized by counting its own
+    InternalRow RDD.
+
+    ``reset_stats=True`` also drops the Catalyst statistics the
+    checkpoint inherits from its source plan, for unbounded loops:
+    ``localCheckpoint`` copies the plan's ESTIMATED stats, so each
+    connected-components round's join estimates multiply on top of the
+    last one's (measured on a planted chain: ``sizeInBytes`` grows ~3x
+    in DIGITS per round until ``java.math.BigInteger`` overflows around
+    round 16).  The result is rebuilt on its own RDD, so no data moves.
+    The reset stats read as the flat per-table default, which is above
+    ``autoBroadcastJoinThreshold``: the planner never broadcasts such a
+    table on its own, so every join on it must carry its own size-gated
+    hint.  That is why only the connected-components loop resets; on the
+    un-hinted pagerank/BFS loops it turned broadcast joins into sort-merge
+    joins (graph_pagerank BHJ 19 → 12, min wall 1.385 → 1.644 s at
+    sf0.01).
+
+    Both paths use Spark-private API (``_jdf``, ``toRdd``,
+    ``pyspark.sql.classic``, ``internalCreateDataFrame``).  If any of it
+    is gone, this logs one WARNING and falls back to public API: the
+    lazy checkpoint's first action, ``count()``, materializes it (one
+    extra aggregate job), and stats are not reset."""
+    ck = df.localCheckpoint(eager=False)
+    try:
+        rows = _internal_rows(ck)
+        if reset_stats:
+            ck = _without_inherited_stats(ck, rows)
+    except (ImportError, AttributeError, Py4JError) as exc:
+        global _PRIVATE_API_WARNED
+        if not _PRIVATE_API_WARNED:
+            _PRIVATE_API_WARNED = True
+            log.warning(
+                "checkpoint private API unavailable (%s: %s); "
+                "counting through the public API without a stats reset",
+                type(exc).__name__,
+                exc,
+            )
+        return ck, ck.count()
+    return ck, rows.count()
+
+
+def _internal_rows(df: DataFrame):
+    """The JVM RDD[InternalRow] behind ``df`` (private API)."""
+    return df._jdf.queryExecution().toRdd()
+
+
+def _without_inherited_stats(df: DataFrame, rows) -> DataFrame:
+    """``df`` rebuilt on ``rows``, its own InternalRow RDD (private API):
+    same data, flat default statistics."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    spark = df.sparkSession
+    j = spark._jsparkSession.internalCreateDataFrame(rows, df._jdf.schema(), False)
+    return _CDF(j, spark)
 
 
 def table_rows(sf_dir: str, name: str) -> int:

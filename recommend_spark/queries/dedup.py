@@ -15,10 +15,7 @@ Five dedup families, each with the shape that survives 100 TB:
 
 from __future__ import annotations
 
-import logging
-
 import pyspark.sql.functions as F
-from py4j.protocol import Py4JError
 from pyspark.sql import Window as W
 
 from ..blockkernel import (
@@ -26,10 +23,8 @@ from ..blockkernel import (
     iter_stream_tiles,
     stream_tile_budget,
 )
-from ..io import hint_if, load_table, sf_key, table_file_bytes
+from ..io import checkpoint, hint_if, load_table, sf_key, table_file_bytes
 from ..registry import register
-
-log = logging.getLogger(__name__)
 
 _SQL_TOKS = "list_distinct(string_split(lower(text), ' '))"
 _JACCARD_TAU = 0.8
@@ -71,8 +66,6 @@ def _pairs_artifact(spark, sf_dir, variant, build):
     deliberately: the checkpoint's RDD materialization path skips AQE,
     losing the skew handling the similarity join depends on (~4× slower,
     measured).  See io.disk_memo for the shared mechanism."""
-    from pathlib import Path
-
     from ..io import disk_memo
 
     # bump when the pair pipeline's semantics change: stale artifacts from
@@ -557,13 +550,7 @@ def _containment_pairs(
         # the corpus ships as an N×|V| uint8 incidence matrix, the A side
         # streams map-only, and every pair's exact intersection is one
         # float32 GEMM cell (integer-exact; see bitset_gemm_pairs).
-        from ..blockkernel import (
-            MAX_BUCKETS,
-            bitset_gemm_pairs,
-            bitset_gemm_pairs_bucketed,
-            collected_toks_bytes,
-            max_staged_bytes,
-        )
+        from ..blockkernel import bitset_gemm_pairs_within_budget
 
         if parts["stats"]["n_docs"] is not None:
             n_docs, n_toks = parts["stats"]["n_docs"], parts["stats"]["n_toks"]
@@ -587,59 +574,19 @@ def _containment_pairs(
         stream = d.filter(F.col("nt") >= min_n).select(
             F.col("doc_id").alias("id"), "nt", "toks"
         )
-        # gate BOTH driver-side footprints against the budget: the f32
-        # incidence matrix AND the Python-object cost of collecting the
-        # (id, nt, toks) rows the matrix is built from — the matrix
-        # alone under-measures the collect by 10-100x at small vocabs
-        matrix_bytes = n_docs * n_vocab * 4
-        if (
-            matrix_bytes <= max_staged_bytes()
-            and collected_toks_bytes(n_docs, n_toks) <= max_staged_bytes()
-        ):
-            index_rows = [
-                (r["doc_id"], r["nt"], r["toks"])
-                for r in d.select("doc_id", "nt", "toks").collect()
-            ]
-            pairs = bitset_gemm_pairs(
-                stream,
-                index_rows,
-                vocab_map,
-                metric="containment",
-                tau=tau,
-                exclude_self=True,
-            )
-        else:
-            # corpus too big to stage driver-side but the vocabulary is
-            # still degenerate (the prefix path would candidate-explode):
-            # the bucketed cogroup twin shuffles grid cells instead of
-            # staging anything — each cell's index block is ~1/B of the
-            # whole, sized back under the budget.  B derives from the
-            # LARGER of the two footprints the gate above measured: the
-            # fallback fires precisely when the token-list bytes (which
-            # exceed the matrix by 10-100x at small vocabs) blow the
-            # budget, so sizing from matrix_bytes alone could pick B=2
-            # and hand each cogroup cell a pandas block 100x over budget.
-            pairs = bitset_gemm_pairs_bucketed(
-                stream,
-                d.select(F.col("doc_id").alias("id"), "nt", "toks"),
-                vocab_map,
-                metric="containment",
-                tau=tau,
-                exclude_self=True,
-                n_buckets=max(
-                    2,
-                    min(
-                        MAX_BUCKETS,
-                        -(
-                            -max(
-                                matrix_bytes,
-                                collected_toks_bytes(n_docs, n_toks),
-                            )
-                            // max_staged_bytes()
-                        ),
-                    ),
-                ),
-            )
+        # a corpus too big to stage driver-side, with a vocabulary still
+        # degenerate (the prefix path would candidate-explode), takes the
+        # bucketed cogroup twin: grid cells shuffle instead of staging
+        pairs = bitset_gemm_pairs_within_budget(
+            stream,
+            d.select(F.col("doc_id").alias("id"), "nt", "toks"),
+            vocab_map,
+            n_index=n_docs,
+            n_index_toks=n_toks,
+            metric="containment",
+            tau=tau,
+            exclude_self=True,
+        )
         return pairs.select(
             F.col("sid").alias("doc_a"),
             F.col("iid").alias("doc_b"),
@@ -1290,72 +1237,7 @@ def _cc_width(n_rows: int) -> int:
     return max(4, min(256, -(-n_rows // _CC_ROWS_PER_PARTITION)))
 
 
-_STATS_RESET_WARNED = False
-
-
-def _cc_checkpoint(df):
-    """localCheckpoint WITHOUT Catalyst-statistics inheritance, for
-    unbounded iterative loops.
-
-    ``Dataset.localCheckpoint`` copies the source plan's ESTIMATED stats
-    into the resulting ``LogicalRDD``, so each contraction round's join
-    estimates multiply on top of the previous round's product: measured
-    on a planted chain, ``sizeInBytes`` grows ~3x in DIGITS per round
-    (27 → 80 → 238 → 713 → 2136 → …) until ``java.math.BigInteger``
-    overflows its supported range around round 16 and the query CRASHES
-    — and the rounds before that grind in million-digit bignum
-    arithmetic inside every stats visit.  The fixture path (1 round +
-    local endgame) never sees this; any deep distributed run does.
-    Rebuilding the Dataset on its own checkpointed InternalRow RDD
-    (``internalCreateDataFrame`` — package-private Scala, public in
-    bytecode, same RDD so zero data movement) drops the inherited stats
-    back to the flat per-table default; with stats reset per round the
-    same loop holds 19 digits forever at ~0.55 s/round.  No partitioning
-    metadata is lost: every call site checkpoints behind a
-    ``coalesce``, which already erases output-partitioning info.
-
-    Invariant for callers: every join on this function's output must
-    carry its own size-gated hint.  The reset stats read as the flat
-    per-table default, which is above autoBroadcastJoinThreshold, so the
-    planner never broadcasts such a side on its own.  That is why the
-    reset stays CC-only: applied to the un-hinted pagerank/BFS loops it
-    turned their broadcast joins into sort-merge joins (graph_pagerank
-    BHJ 19 → 12, min wall 1.385 → 1.644 s at sf0.01).  Pinned by
-    tests/test_r11/r15.
-
-    The rebuild goes through Spark-private API (``pyspark.sql.classic``,
-    ``internalCreateDataFrame``).  If either is gone the loop falls back
-    to the plain ``localCheckpoint`` with one WARNING: same labels, only
-    a very deep distributed run would then hit the stats growth."""
-    ck = df.localCheckpoint()
-    try:
-        return _drop_inherited_stats(ck)
-    except (ImportError, AttributeError, Py4JError) as exc:
-        global _STATS_RESET_WARNED
-        if not _STATS_RESET_WARNED:
-            _STATS_RESET_WARNED = True
-            log.warning(
-                "CC checkpoint stats reset unavailable (%s: %s); "
-                "using plain localCheckpoint",
-                type(exc).__name__,
-                exc,
-            )
-        return ck
-
-
-def _drop_inherited_stats(ck):
-    """Rebuild a checkpointed DataFrame on its own InternalRow RDD."""
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-    jdf = ck._jdf
-    spark = ck.sparkSession
-    j = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
-    return _CDF(j, spark)
-
-
-def _cc_round(e, rep, n_edges: int, rep_width: int, checkpoint: bool = True):
+def _cc_round(e, rep, n_edges: int, rep_width: int):
     """One min-contraction round: relabel every node to min(self,
     neighbors), rewrite ``rep`` through the map, contract the edge set.
 
@@ -1364,14 +1246,14 @@ def _cc_round(e, rep, n_edges: int, rep_width: int, checkpoint: bool = True):
     corpus has a map as big as the node set — an unconditional hint there
     OOMs the executors, and AQE will not override an explicit hint);
     past the budget the joins run as plain equi-joins and AQE picks the
-    strategy.  ``checkpoint=False`` keeps the join plans inspectable for
-    the plan tests; the operator always checkpoints (plan stays O(1) in
-    rounds).  ``rep=None`` means the identity map (round 1): every node
+    strategy.  ``rep=None`` means the identity map (round 1): every node
     appears as a src in the doubled edge set, so rep-after-round-1 IS
     mapv — skipping the identity relabel join AND the separate
     distinct() build of the initial rep (one shuffle of the full node
     set plus two eager checkpoints, measured 2.83 → 2.16 s at sf0.1,
-    guide §2.4: remove shuffles outright).  Returns (rep', e')."""
+    guide §2.4: remove shuffles outright).  Returns (rep', e') un-
+    materialized; only mapv, which three joins read, is checkpointed
+    here, so with ``rep=None`` rep' is a projection of that checkpoint."""
     width = _cc_width(n_edges)
     mapv = (
         e.groupBy("src")
@@ -1382,9 +1264,8 @@ def _cc_round(e, rep, n_edges: int, rep_width: int, checkpoint: bool = True):
         )
         .coalesce(width)
     )
-    if checkpoint:
-        mapv = _cc_checkpoint(mapv)
-    bc = _cc_map_broadcastable(n_edges)
+    mapv, _ = checkpoint(mapv, reset_stats=True)
+    bc =_cc_map_broadcastable(n_edges)
 
     def _hint(df):
         return F.broadcast(df) if bc else df
@@ -1410,12 +1291,6 @@ def _cc_round(e, rep, n_edges: int, rep_width: int, checkpoint: bool = True):
         .distinct()
         .coalesce(width)
     )
-    if checkpoint:
-        # rep=None round: rep2 is a projection over the already-
-        # checkpointed mapv — a second materialization buys nothing
-        if rep is not None:
-            rep2 = _cc_checkpoint(rep2)
-        e2 = _cc_checkpoint(e2)
     return rep2, e2
 
 
@@ -1473,7 +1348,7 @@ def _cc_star_pair(e, width: int):
         .distinct()
     )
     out = ss.union(ss.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return _cc_checkpoint(out.coalesce(width))
+    return checkpoint(out.coalesce(width), reset_stats=True)[0]
 
 
 def _cc_components(pairs):
@@ -1520,8 +1395,11 @@ def _cc_components(pairs):
 
     e = edges
     while n > 0:
-        rep, e = _cc_round(e, rep, n, rep_width)
-        n = e.count()
+        rep2, e = _cc_round(e, rep, n, rep_width)
+        # round 1's rep2 projects the map _cc_round already checkpointed:
+        # a second materialization buys nothing
+        rep = rep2 if rep is None else checkpoint(rep2, reset_stats=True)[0]
+        e, n = checkpoint(e, reset_stats=True)
         if n == 0:
             break
         if n <= LOCAL_ENDGAME_EDGES:
@@ -1537,10 +1415,11 @@ def _cc_components(pairs):
             # old unconditional hint the budget couldn't reach.
             fm = _cc_min_local(e)
             fm_hinted = F.broadcast(fm) if _cc_map_broadcastable(2 * n) else fm
-            rep = _cc_checkpoint(
+            rep, _ = checkpoint(
                 rep.join(fm_hinted, rep.cur == fm.v, "left")
                 .select("orig", F.coalesce("m", "cur").alias("cur"))
-                .coalesce(rep_width)
+                .coalesce(rep_width),
+                reset_stats=True,
             )
             break
         # deep residual (never reached at fixture scale): crush component
@@ -1600,7 +1479,7 @@ def dedup_cluster(spark, sf_dir):
     budget and a 100× corpus falls back to AQE-planned equi-joins with
     partition widths derived from the edge count).  The component minimum
     never relabels, so the fixpoint labels every node with its component's
-    min doc_id — unique, hence hash-stable.  localCheckpoint per round (not
+    min doc_id — unique, hence hash-stable.  io.checkpoint per round (not
     just persist): the plan would otherwise embed the similarity pipeline
     plus every prior round, and the driver OOMs just printing it.
     The DuckDB oracle computes the same closure with a recursive CTE."""

@@ -1104,13 +1104,7 @@ def _set_similarity_pairs(
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c")).persist()
     is_probe = F.col("doc_id") % 100 == 0
     if not force_prefix_path:
-        from ..blockkernel import (
-            MAX_BUCKETS,
-            bitset_gemm_pairs,
-            bitset_gemm_pairs_bucketed,
-            collected_toks_bytes,
-            max_staged_bytes,
-        )
+        from ..blockkernel import bitset_gemm_pairs_within_budget
 
         probes = docs.filter(is_probe).select(
             F.col("doc_id").alias("id"), F.size("toks").alias("nt"), "toks"
@@ -1158,52 +1152,15 @@ def _set_similarity_pairs(
                 )
                 .repartition(spread_width(docs.sparkSession))
             )
-            # bound the f32 probe matrix AND the Python-object cost of
-            # the probes collect (the matrix alone under-measures it)
-            matrix_bytes = n_probes * n_vocab * 4
-            if (
-                matrix_bytes <= max_staged_bytes()
-                and collected_toks_bytes(n_probes, n_ptoks)
-                <= max_staged_bytes()
-            ):
-                index_rows = [
-                    (r["id"], r["nt"], r["toks"]) for r in probes.collect()
-                ]
-                pairs = bitset_gemm_pairs(
-                    stream,
-                    index_rows,
-                    vocab_map,
-                    metric="jaccard",
-                    tau=_SSJ_TAU,
-                )
-            else:
-                # probe relation too big to stage driver-side: the
-                # bucketed cogroup twin grids stream×probe buckets with
-                # each cell's probe block back under the budget.  B sizes
-                # from the LARGER measured footprint — the fallback fires
-                # precisely when the token-list bytes (10-100x the matrix
-                # at small vocabs) blow the budget, so matrix_bytes alone
-                # could pick B=2 with cells far over budget.
-                pairs = bitset_gemm_pairs_bucketed(
-                    stream,
-                    probes,
-                    vocab_map,
-                    metric="jaccard",
-                    tau=_SSJ_TAU,
-                    n_buckets=max(
-                        2,
-                        min(
-                            MAX_BUCKETS,
-                            -(
-                                -max(
-                                    matrix_bytes,
-                                    collected_toks_bytes(n_probes, n_ptoks),
-                                )
-                                // max_staged_bytes()
-                            ),
-                        ),
-                    ),
-                )
+            pairs = bitset_gemm_pairs_within_budget(
+                stream,
+                probes,
+                vocab_map,
+                n_index=n_probes,
+                n_index_toks=n_ptoks,
+                metric="jaccard",
+                tau=_SSJ_TAU,
+            )
             return pairs.select(
                 F.col("iid").alias("probe_id"),
                 F.col("sid").alias("match_id"),

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from ..canon import dsum
-from ..io import disk_memo, load_table, sf_key
+from ..io import checkpoint, disk_memo, load_table, sf_key
 from ..registry import register
 
 
@@ -30,7 +30,6 @@ def _baskets_artifact(spark, sf_dir):
     graph_triangles): the orders⨝lineitem distinct runs once per corpus
     snapshot; every consumer reads the parquet artifact.  Written
     pre-clustered on the self-join key u for file-level locality."""
-    from pathlib import Path
 
     def build():
         o = load_table(spark, sf_dir, "orders")
@@ -104,8 +103,6 @@ def _copurchase_edges_artifact(spark, sf_dir):
     Spark re-plans recursive-CTE base relations at every iteration step.
     The >=3 floor keeps the artifact tiny (singleton pairs dominate the
     12.7M raw pairs and no consumer wants them)."""
-    from pathlib import Path
-
     return disk_memo(
         spark,
         f"copurchase_edges_v2_{sf_key(sf_dir)}",
@@ -876,7 +873,7 @@ def graph_pagerank(spark, sf_dir):
     symmetrized (PageRank needs out-edges; an undirected graph gets both
     directions), so every node has out-degree >= 1 and there is no
     dangling-mass term.  Each round is contrib = rank/deg routed along
-    edges, one hash-shuffle groupBy(dst); `localCheckpoint` per round cuts
+    edges, one hash-shuffle groupBy(dst); `io.checkpoint` per round cuts
     the lineage so round k+1 replans from materialized ranks instead of a
     2^k-deep DAG (the dedup_cluster / MapReduce-iteration recipe).
 
@@ -895,10 +892,9 @@ def graph_pagerank(spark, sf_dir):
         .filter(F.col("cooc") >= 5)
         .select("p", "q")
     )
-    edges = (
+    edges, _ = checkpoint(
         und.select(F.col("p").alias("src"), F.col("q").alias("dst"))
         .unionAll(und.select(F.col("q").alias("src"), F.col("p").alias("dst")))
-        .localCheckpoint()
     )
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # rank state CARRIES deg (r14): out-degree is loop-invariant, so
@@ -922,7 +918,7 @@ def graph_pagerank(spark, sf_dir):
             .groupBy("dst")
             .agg(F.sum("c").cast("double").alias("inflow"))
         )
-        ranks = (
+        ranks, _ = checkpoint(
             ranks.select("src", "deg")
             .join(contrib.withColumnRenamed("dst", "src"), "src", "left")
             .select(
@@ -930,7 +926,6 @@ def graph_pagerank(spark, sf_dir):
                 "deg",
                 (F.lit(0.15) + F.coalesce(F.col("inflow"), F.lit(0.0))).alias("rank"),
             )
-            .localCheckpoint()
         )
     return (
         ranks.select(F.col("src").alias("node"), "rank")
@@ -1127,7 +1122,7 @@ def label_propagation(symmetric_edges, rounds: int = 5):
     One edges-to-labels hash join + one (node, label) integer-sum
     aggregate + one max-by-struct reduction per round (max(struct(s,
     -label)) is max-weight-then-min-label without a second shuffle);
-    localCheckpoint per round cuts the lineage (the graph_pagerank /
+    io.checkpoint per round cuts the lineage (the graph_pagerank /
     dedup_cluster iteration recipe).  Integer weights + the total
     tie-break make every round a pure function of the previous labeling —
     bit-identical on any partitioning.  Module-level so the quality gate
@@ -1159,7 +1154,7 @@ def label_propagation(symmetric_edges, rounds: int = 5):
                 .groupBy("src", "label")
                 .agg(F.sum("w").alias("s"))
             )
-        lbl = (
+        lbl, _ = checkpoint(
             nbr.groupBy(F.col("src").alias("node"))
             .agg(
                 F.max(
@@ -1167,7 +1162,6 @@ def label_propagation(symmetric_edges, rounds: int = 5):
                 ).alias("m")
             )
             .select("node", (-F.col("m.nl")).alias("label"))
-            .localCheckpoint()
         )
     return lbl
 
@@ -1740,21 +1734,24 @@ def graph_bfs_distances(spark, sf_dir):
     min() is order-free, so unlike pagerank's float mass this traversal
     hash-matches a DuckDB recursive CTE exactly.  Spark side runs the
     textbook frontier loop — 4 bounded rounds of frontier⨝adjacency then
-    groupBy(node).min(dist), with localCheckpoint per round cutting the
+    groupBy(node).min(dist), with io.checkpoint per round cutting the
     lineage (the pagerank/dedup_cluster recipe).  Each round shuffles
-    O(frontier-edges) rows and state is O(nodes); at 100 TB this is
+    O(frontier-edges) rows while the frontier broadcasts (past that, the
+    adjacency too) and state is O(nodes); at 100 TB this is
     Pregel-without-Pregel, and the bounded depth caps the rounds
     regardless of graph size.  Edge set reads from the shared disk-memoized
     artifact."""
     und = _copurchase_edges_artifact(spark, sf_dir).select("p", "q")
-    # hash-partition the adjacency by the expansion key ONCE, inside the
-    # checkpoint: every BFS round's frontier join then reuses this layout
-    # (checkpoint preserves output partitioning) instead of re-shuffling
-    # the full edge set per hop when the frontier outgrows a broadcast
-    # (guide §2.4 — persist a partitioning that repeated joins reuse)
-    adj = und.select(F.col("p").alias("src"), F.col("q").alias("dst")).unionAll(
-        und.select(F.col("q").alias("src"), F.col("p").alias("dst"))
-    ).repartition(F.col("src")).localCheckpoint()
+    # spread the adjacency over the shuffle width by the expansion key
+    # before the checkpoint, so the (broadcast-frontier) expand join
+    # streams it on every core.  The layout is NOT reused past a
+    # broadcast: a plan dump with auto-broadcast off shows an Exchange
+    # on the checkpointed adj in every round.
+    adj, _ = checkpoint(
+        und.select(F.col("p").alias("src"), F.col("q").alias("dst"))
+        .unionAll(und.select(F.col("q").alias("src"), F.col("p").alias("dst")))
+        .repartition(F.col("src"))
+    )
     deg = adj.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
     seed = (
         deg.orderBy(F.col("d").desc(), "node")
@@ -1771,46 +1768,39 @@ def bfs_distances(adj, seed, max_hops: int):
     dist 0 (level-synchronous BFS: the frontier after round t is exactly
     the dist==t layer).  Module-level so tests can drive it with planted
     graphs of known distances (tests/test_properties.py)."""
-    # LAYERED frontier BFS (r15): the settled set is kept as per-hop
-    # LAYERS instead of one folded table.  The r14 union+min fold
-    # re-shuffled the ENTIRE settled set (O(reachable nodes)) through the
-    # groupBy exchange every round even though settled rows can never
-    # change; and the expand join re-shuffled the full adjacency every
-    # round whenever the frontier outgrew a broadcast.  Now:
-    #   - the caller pre-partitions adj by src ONCE (graph_bfs_distances
-    #     repartitions before its checkpoint), so each round's expand
-    #     join leaves adj in place and moves only the frontier;
-    #   - this round's discoveries dedup through ONE exchange
-    #     (distinct on the expansion rows only);
-    #   - already-settled nodes drop via left_anti joins against the
-    #     previous layers — layers and the distinct output are all
-    #     hash-partitioned on `node` at session width, so these anti
-    #     joins are co-partitioned (zero exchange; at fixture scale AQE
-    #     broadcasts the small layers instead, same zero-fact-shuffle
-    #     effect).
-    # Net per round: ONE exchange carrying only newly-expanded rows —
-    # the level-synchronous minimum.  Bit-identity with the fold: in
-    # level-synchronous BFS a node's min distance IS its first discovery
-    # round, every expansion this round carries dist = hop exactly, and
-    # the layers are disjoint by construction, so the union of layers
-    # equals the folded min table row-for-row (planted path/star/island
-    # tests pin it; the operator's DuckDB oracle hash-matches).
-    # A round with no new discoveries ends the loop: every later frontier
-    # is empty too, so the early exit is exact and skips the remaining
-    # fixed per-round costs.
-    layers = [seed.localCheckpoint()]
-    frontier = layers[0]
+    # Level-synchronous frontier BFS (Beamer et al., SC 2012): a node's
+    # min distance IS the hop that first discovers it, so each round
+    # keeps only the expansion targets no earlier round settled and tags
+    # them with the hop.  The output is the union of those disjoint
+    # layers, row-for-row the groupBy(node).min(dist) fold the DuckDB
+    # oracle computes.  Per round:
+    #   - the expand join broadcasts the frontier while it is small;
+    #     past that it is a sort-merge join that shuffles adj too;
+    #   - distinct() runs on `node` alone (dist is a constant re-attached
+    #     after), so its one exchange hash-partitions the discoveries by
+    #     node and the anti join reuses that layout on its left side;
+    #   - ONE left_anti join against the settled set, the union of every
+    #     layer's node column (a union of checkpointed scans: AQE
+    #     broadcasts it while small, else it shuffles to node every
+    #     round);
+    #   - io.checkpoint materializes the new layer and counts it in the
+    #     same job; an empty layer ends the loop, since every later
+    #     frontier would be empty too.
+    layers = [checkpoint(seed)[0]]
+    frontier = settled = layers[0].select("node")
     for hop in range(1, max_hops + 1):
-        expand = frontier.join(adj, frontier["node"] == adj["src"]).select(
-            F.col("dst").alias("node"), F.lit(hop).alias("dist")
+        fresh = (
+            frontier.join(adj, frontier["node"] == adj["src"])
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(settled, "node", "left_anti")
         )
-        fresh = expand.distinct()
-        for prev in layers:
-            fresh = fresh.join(prev, "node", "left_anti")
-        frontier = fresh.localCheckpoint()
-        if frontier.isEmpty():
+        layer, n = checkpoint(fresh.select("node", F.lit(hop).alias("dist")))
+        if n == 0:
             break
-        layers.append(frontier)
+        layers.append(layer)
+        frontier = layer.select("node")
+        settled = settled.unionByName(frontier)
     out = layers[0]
     for layer in layers[1:]:
         out = out.unionByName(layer)
@@ -2023,9 +2013,9 @@ def rec_eval_replay(spark, sf_dir):
 def kcore_peel(edges, k: int, rounds: int):
     """k-core peeling over a symmetric edge list (src, dst) to the TRUE
     fixpoint: distributed synchronous rounds strip the mass periphery
-    (each round = one degree aggregate + two semi joins, checkpointed
-    eagerly per the iterative-fixpoint contract, early-exiting on an
-    unchanged edge count), and once the surviving edge set fits a single
+    (each round = one degree aggregate + two semi joins, materialized
+    through ``io.checkpoint``, whose row count drives the early exit on
+    an unchanged edge count), and once the surviving edge set fits a single
     task (``io.LOCAL_ENDGAME_EDGES``) the remaining cascade finishes
     EXACTLY inside one mapInPandas partition — no driver collect, no
     round budget.
@@ -2082,10 +2072,9 @@ def kcore_peel(edges, k: int, rounds: int):
                 break
         yield pd.DataFrame({"src": nodes[s], "dst": nodes[d]})
 
-    cur = edges
+    cur, n = edges, edges.count()
     prev_n = None
     for _ in range(rounds):
-        n = cur.count()
         if n == prev_n:
             return cur  # synchronous fixpoint reached
         prev_n = n
@@ -2095,12 +2084,10 @@ def kcore_peel(edges, k: int, rounds: int):
             )
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
-        cur = (
-            cur.join(keep, "src", "left_semi")
-            .join(
+        cur, n = checkpoint(
+            cur.join(keep, "src", "left_semi").join(
                 keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
             )
-            .localCheckpoint()
         )
     return cur
 

@@ -5,9 +5,10 @@ Construction-cost contract: building a registered query is cheap — multi-
 consumer intermediates use ``localCheckpoint(eager=False)`` so plan dumps
 here never trigger a scan.  The ONE exception is the iterative-fixpoint
 family (dedup_cluster, graph_pagerank, graph_label_propagation,
-graph_bfs_distances): their per-round loops checkpoint EAGERLY during
-construction (measured fastest, and the loop logic depends on real
-materialization), so merely constructing them runs the rounds."""
+graph_bfs_distances, graph_kcore): their per-round loops materialize
+EAGERLY during construction through ``io.checkpoint``, which also returns
+the row count the loop-exit tests read, so merely constructing them runs
+the rounds."""
 
 from __future__ import annotations
 

@@ -993,6 +993,21 @@ def test_bfs_kernel_on_planted_graphs(spark):
     got = {r["node"]: r["dist"] for r in bfs_distances(two, seed, 4).collect()}
     assert got == {0: 0, 1: 1}
 
+    # 10-cycle 0..9 with chord 2-6 and a tail 5-10-11-..-15: the cycle
+    # rediscovers settled nodes from both sides every hop, the chord
+    # shortcuts 6 (3 hops, not 4) and 5 (4, not 5), and the tail runs
+    # past the hop bound
+    cyc = sym(
+        [(i, (i + 1) % 10) for i in range(10)]
+        + [(2, 6), (5, 10)]
+        + [(i, i + 1) for i in range(10, 15)]
+    )
+    got = {r["node"]: r["dist"] for r in bfs_distances(cyc, seed, 8).collect()}
+    assert got == {
+        0: 0, 1: 1, 9: 1, 2: 2, 8: 2, 3: 3, 6: 3, 7: 3, 4: 4, 5: 4,
+        10: 5, 11: 6, 12: 7, 13: 8,
+    }
+
 
 def _degenerate_corpus(rng, n_docs, vocab_size, id_of):
     """Small-vocabulary corpus (the bitset GEMM kernel's regime): every

@@ -54,7 +54,7 @@ def test_cc_round_hints_broadcast_under_budget(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        rep2, e2 = _cc_round(e, rep, n_edges=8, rep_width=4, checkpoint=False)
+        rep2, e2 = _cc_round(e, rep, n_edges=8, rep_width=4)
         # threshold is -1, so any BroadcastHashJoin here comes from the hint
         assert "BroadcastHashJoin" in _plan(rep2), _plan(rep2)[:2000]
         assert "BroadcastHashJoin" in _plan(e2), _plan(e2)[:2000]
@@ -71,9 +71,7 @@ def test_cc_round_gated_path_carries_no_hint(spark):
         # no ResolvedHint in the analyzed plan (the decision is AQE's,
         # not forced) and, with auto-broadcast off, no broadcast join in
         # the physical plan either
-        rep2, e2 = _cc_round(
-            e, rep, n_edges=10**9, rep_width=4, checkpoint=False
-        )
+        rep2, e2 = _cc_round(e, rep, n_edges=10**9, rep_width=4)
         for df in (rep2, e2):
             assert "ResolvedHint" not in _analyzed(df), _analyzed(df)[:2000]
             assert "BroadcastHashJoin" not in _plan(df), _plan(df)[:2000]

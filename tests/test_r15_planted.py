@@ -15,13 +15,19 @@ io.LOCAL_ENDGAME_EDGES to 0 and pin three things:
   with the pair interleaved (the old loop needed n-1);
 * equivalence: the deep-distributed path and the local-endgame path label
   a mixed planted graph identically, and labels are the component min;
-* drift: with the stats-reset's private Spark API gone, the loop falls
-  back to plain localCheckpoint, logs one WARNING and labels identically.
+* io.checkpoint: the count comes from the materializing job (no more
+  jobs than a plain localCheckpoint), and only a stats-reset checkpoint
+  stops the planner from broadcasting it on its own;
+* drift: with io.checkpoint's private Spark API gone (the count path or
+  the stats reset), the loop falls back to the public API, logs one
+  WARNING and labels identically.
 """
 
 from __future__ import annotations
 
 import logging
+import time
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -84,11 +90,80 @@ def test_cc_star_pair_preserves_components(spark):
         assert before == after, name
 
 
+def _jobs(spark, call):
+    sc = spark.sparkContext
+    group = f"ckpt-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(0.5)  # the status store is fed by the async listener bus
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _grouped(spark):
+    # a shuffle, so AQE runs a stage job before the result job
+    return spark.range(0, 1000, 1, 4).groupBy((F.col("id") % 37).alias("k")).count()
+
+
+def test_checkpoint_counts_in_the_materializing_job(spark):
+    (ck, n), ck_jobs = _jobs(spark, lambda: io.checkpoint(_grouped(spark)))
+    _, lc_jobs = _jobs(spark, lambda: _grouped(spark).localCheckpoint())
+    assert n == 37
+    assert ck_jobs <= lc_jobs, (ck_jobs, lc_jobs)
+    assert sorted(map(tuple, ck.collect())) == sorted(
+        map(tuple, _grouped(spark).collect())
+    )
+
+
+@pytest.mark.parametrize("drift", [False, True], ids=["private_api", "fallback"])
+def test_checkpoint_materializes_once(spark, monkeypatch, drift):
+    # a udf that counts its own evaluations: the checkpoint evaluates each
+    # source row once, and later reads run on the stored blocks
+    if drift:
+
+        def broken(*_):
+            raise AttributeError("'DataFrame' object has no attribute '_jdf'")
+
+        monkeypatch.setattr(io, "_internal_rows", broken)
+        monkeypatch.setattr(io, "_PRIVATE_API_WARNED", False)
+    evals = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        evals.add(1)
+        return v
+
+    src = spark.range(0, 50, 1, 4).select(F.udf(tick, "long")("id").alias("id"))
+    ck, n = io.checkpoint(src, reset_stats=True)
+    assert (n, evals.value) == (50, 50)
+    assert sorted(r["id"] for r in ck.collect()) == list(range(50))
+    assert ck.count() == 50
+    assert evals.value == 50
+
+
+def test_checkpoint_stats_reset_gates_auto_broadcast(spark):
+    # the invariant behind reset_stats being CC-only: a checkpoint keeps
+    # its source's size estimate, so the planner still broadcasts it on
+    # its own; a reset one reads as the per-table default and never is
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10485760b"
+    big = spark.range(10**9)
+
+    def plan(small):
+        return big.join(small, "id")._jdf.queryExecution().executedPlan().toString()
+
+    kept, _ = io.checkpoint(spark.range(10))
+    reset, _ = io.checkpoint(spark.range(10), reset_stats=True)
+    assert "BroadcastHashJoin" in plan(kept), plan(kept)
+    assert "BroadcastHashJoin" not in plan(reset), plan(reset)
+
+
 def test_cc_checkpoint_resets_catalyst_stats(spark):
     # Dataset.localCheckpoint inherits the source plan's ESTIMATED stats,
     # so per-round join estimates compound ~3x in DIGITS per round until
-    # BigInteger overflows (~round 16) — _cc_checkpoint must keep the
-    # loop's sizeInBytes flat (the per-table default) forever
+    # BigInteger overflows (~round 16) — io.checkpoint(reset_stats=True)
+    # must keep the loop's sizeInBytes flat (the per-table default) forever
     import pyspark.sql.functions as F
 
     pairs = spark.range(1, 40).selectExpr("id AS doc_a", "id + 1 AS doc_b")
@@ -99,6 +174,8 @@ def test_cc_checkpoint_resets_catalyst_stats(spark):
     digits = []
     for _ in range(6):
         rep, e = dd._cc_round(e, rep, n_edges=80, rep_width=4)
+        rep, _ = io.checkpoint(rep, reset_stats=True)
+        e, _ = io.checkpoint(e, reset_stats=True)
         sb = str(e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         digits.append(len(sb))
     assert max(digits) <= 25, digits  # compounding would be >2000 by round 6
@@ -141,15 +218,20 @@ def test_cc_components_deep_path_matches_endgame_path(spark, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "drift",
+    "seam,drift",
     [
-        ImportError("No module named 'pyspark.sql.classic'"),
-        Py4JError("Method internalCreateDataFrame([...]) does not exist"),
+        ("_internal_rows", AttributeError("'DataFrame' has no attribute '_jdf'")),
+        ("_internal_rows", Py4JError("Method toRdd([]) does not exist")),
+        ("_without_inherited_stats", ImportError("No module named 'pyspark.sql.classic'")),
+        (
+            "_without_inherited_stats",
+            Py4JError("Method internalCreateDataFrame([...]) does not exist"),
+        ),
     ],
-    ids=["no_classic_module", "no_internalCreateDataFrame"],
+    ids=["no_jdf", "no_toRdd", "no_classic_module", "no_internalCreateDataFrame"],
 )
 def test_cc_checkpoint_falls_back_on_private_api_drift(
-    spark, monkeypatch, caplog, drift
+    spark, monkeypatch, caplog, seam, drift
 ):
     # every planted shape in one graph (forest shifted off the chain's ids)
     forest = [(a + 1000, b + 1000) for a, b in PLANTED["forest"]]
@@ -157,12 +239,12 @@ def test_cc_checkpoint_falls_back_on_private_api_drift(
     pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     ref = sorted(map(tuple, _cc_components(pdf)[0].collect()))
 
-    def broken(ck):
+    def broken(*_):
         raise drift
 
-    monkeypatch.setattr(dd, "_drop_inherited_stats", broken)
-    monkeypatch.setattr(dd, "_STATS_RESET_WARNED", False)
-    with caplog.at_level(logging.WARNING, logger=dd.__name__):
+    monkeypatch.setattr(io, seam, broken)
+    monkeypatch.setattr(io, "_PRIVATE_API_WARNED", False)
+    with caplog.at_level(logging.WARNING, logger=io.__name__):
         endgame = sorted(map(tuple, _cc_components(pdf)[0].collect()))
         monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
         deep = sorted(map(tuple, _cc_components(pdf)[0].collect()))
