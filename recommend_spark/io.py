@@ -117,7 +117,9 @@ def checkpoint(df: DataFrame, *, reset_stats: bool = False) -> tuple[DataFrame, 
     connected-components round's join estimates multiply on top of the
     last one's (measured on a planted chain: ``sizeInBytes`` grows ~3x
     in DIGITS per round until ``java.math.BigInteger`` overflows around
-    round 16).  The result is rebuilt on its own RDD, so no data moves.
+    round 16).  The result is rebuilt on its own RDD, so no data moves;
+    the rebuild also drops output-partitioning metadata, which the CC
+    loop's call sites have already lost to a ``coalesce``.
     The reset stats read as the flat per-table default, which is above
     ``autoBroadcastJoinThreshold``: the planner never broadcasts such a
     table on its own, so every join on it must carry its own size-gated

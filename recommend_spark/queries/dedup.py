@@ -1265,7 +1265,7 @@ def _cc_round(e, rep, n_edges: int, rep_width: int):
         .coalesce(width)
     )
     mapv, _ = checkpoint(mapv, reset_stats=True)
-    bc =_cc_map_broadcastable(n_edges)
+    bc = _cc_map_broadcastable(n_edges)
 
     def _hint(df):
         return F.broadcast(df) if bc else df
