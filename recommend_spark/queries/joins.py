@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from ..canon import r4
-from ..io import hint_if, load_table, sf_key, spread_width, table_file_bytes, table_rows
+from ..io import hint_if, load_table, sf_key, spread_width, stage, table_file_bytes, table_rows
 from ..registry import register
 
 
@@ -400,45 +400,39 @@ def join_bucketed(spark, sf_dir):
     sf_dir (fixtures are immutable): the first run pays the layout,
     repeat runs measure what production measures, the shuffle-free join
     itself."""
-    from pathlib import Path
-
-    from .scans import ART
-
-    tag = sf_key(sf_dir)
-    done = Path(ART) / f"bucketed_{tag}" / "_DONE"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
     )
-    for df, name, key in ((o, "orders", "o_orderkey"), (li, "lineitem", "l_orderkey")):
-        path = f"{ART}/bucketed_{tag}/{name}"
-        if done.exists():
-            # layout already on disk: re-register the external table WITH
-            # its bucket spec (bucketing lives in catalog metadata, not the
-            # files — a plain createTable would silently reintroduce the
-            # shuffle this operator exists to eliminate)
-            if not spark.catalog.tableExists(f"rs_bucketed_{name}"):
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE rs_bucketed_{name} ({cols}) USING PARQUET "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
-                    f"LOCATION '{path}'"
-                )
-            continue
-        spark.sql(f"DROP TABLE IF EXISTS rs_bucketed_{name}")
-        (
-            df.write.bucketBy(8, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(f"rs_bucketed_{name}")
+    sides = ((o, "orders", "o_orderkey"), (li, "lineitem", "l_orderkey"))
+
+    def build(root):
+        # only saveAsTable writes bucketed files; dropping the external
+        # table afterwards keeps them
+        for df, name, key in sides:
+            spark.sql(f"DROP TABLE IF EXISTS rs_bucketed_{name}")
+            df.write.bucketBy(8, key).sortBy(key).option(
+                "path", str(root / name)
+            ).saveAsTable(f"rs_bucketed_{name}")
+            spark.sql(f"DROP TABLE rs_bucketed_{name}")
+
+    root = stage(f"bucketed_{sf_key(sf_dir)}", build)
+    for df, name, key in sides:
+        # register the external table WITH its bucket spec (bucketing
+        # lives in catalog metadata, not the files — a plain createTable
+        # would silently reintroduce the shuffle this operator exists to
+        # eliminate); re-created per call so it points at this corpus
+        cols = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
-    done.parent.mkdir(parents=True, exist_ok=True)
-    done.touch()
+        spark.sql(f"DROP TABLE IF EXISTS rs_bucketed_{name}")
+        spark.sql(
+            f"CREATE TABLE rs_bucketed_{name} ({cols}) USING PARQUET "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
+            f"LOCATION '{root / name}'"
+        )
     ob = spark.table("rs_bucketed_orders")
     lb = spark.table("rs_bucketed_lineitem")
     j = ob.join(lb, ob.o_orderkey == lb.l_orderkey)
@@ -472,19 +466,13 @@ def join_partition_pruned(spark, sf_dir):
     time.  This is the star-schema scan-killer at 100 TB (static pruning
     can't help — the predicate is on the dim).  Plan-asserted in
     tests/test_plans.py (`dynamicpruning` in PartitionFilters)."""
-    from pathlib import Path
-
-    from .scans import ART
-
-    root = Path(ART) / f"orders_by_priority_{sf_key(sf_dir)}"
-    if not (root / "_DONE").exists():
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice", "o_orderpriority"
-        )
-        o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(
-            str(root / "data")
-        )
-        (root / "_DONE").touch()
+    root = stage(
+        f"orders_by_priority_{sf_key(sf_dir)}",
+        lambda d: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        .write.partitionBy("o_orderpriority")
+        .parquet(str(d / "data")),
+    )
     fact = spark.read.parquet(str(root / "data"))
     dim = spark.createDataFrame(
         [

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from ..canon import dsum
-from ..io import checkpoint, disk_memo, load_table, sf_key
+from ..io import checkpoint, disk_memo, load_table, sf_key, stage
 from ..registry import register
 
 
@@ -204,37 +204,42 @@ def _ratings(spark, sf_dir):
 _ALS_CACHE: dict = {}
 
 
-def _fit_als(spark, sf_dir):
-    """Fit (or reuse) the ALS model for a corpus.
+def _fit_als(spark, sf_dir, train_fold=False):
+    """Fit (or reuse) the ALS model for a corpus; returns (ratings, model).
+
+    ``train_fold=True`` fits on the 80% md5-bucket train fold instead
+    (rec_eval_recall) and returns the ratings tagged with their bucket
+    column ``b``: the fold is a pure function of (corpus, md5 bucket
+    rule), so the staged model carries no test-set leakage.
 
     Two memo layers, same rationale as the pair/edge artifacts: the model
     is deterministic for a given seed + corpus, so reuse is sound.
     (1) per-(session, sf_dir) — four als_* queries and the recsys eval
-    share one fit inside a sweep; (2) on DISK under .artifacts via
-    ml's native ALSModel.save/load — a fresh process (the driver's bench
-    and correctness runs are separate processes) loads the exact trained
-    factors (~0.5 s) instead of re-running the ~10 s fit.  Factor floats
-    round-trip bit-exactly through the parquet model format, so every
+    share one fit inside a sweep; (2) on DISK via ``stage`` and ml's
+    native ALSModel.save/load — a fresh process (the driver's bench and
+    correctness runs are separate processes) loads the exact trained
+    factors (~0.5 s) instead of re-running the ~10 s fit.  Every path
+    reads the published model, and factor floats round-trip bit-exactly
+    through the parquet model format (als_model_io gates this), so every
     downstream gate (fold-in cosine, recall eval) sees identical values."""
-    from pathlib import Path
-
     from pyspark.ml.recommendation import ALS, ALSModel
 
-    from ..io import ART_ROOT
-
-    key = (id(spark.sparkContext), sf_dir)
+    key = (id(spark.sparkContext), sf_dir, train_fold)
     if key not in _ALS_CACHE:
-        ratings = _ratings(spark, sf_dir).cache()
-        disk = Path(ART_ROOT) / f"als_model_v1_{sf_key(sf_dir)}"
-        if (disk / "_DONE").exists():
-            model = ALSModel.load(str(disk / "model"))
-        else:
-            model = ALS(**_ALS_PARAMS).fit(ratings)
-            model.write().overwrite().save(str(disk / "model"))
-            (disk / "_DONE").touch()
+        ratings = _ratings(spark, sf_dir)
+        if train_fold:
+            ratings = ratings.withColumn("b", _fold_bucket())
+        ratings = ratings.cache()
+        train = ratings.filter(F.col("b") < 80).drop("b") if train_fold else ratings
+        name = "als_trainfold_v1" if train_fold else "als_model_v1"
+        root = stage(
+            f"{name}_{sf_key(sf_dir)}",
+            lambda d: ALS(**_ALS_PARAMS).fit(train).write().save(str(d / "model")),
+        )
+        model = ALSModel.load(str(root / "model"))
         # factors are tiny (|users|+|items| rank-8 rows) and consumed by
-        # four queries — pin them so the loaded-model path doesn't re-read
-        # the model parquet per consumer
+        # four queries — pin them so they are not re-read from the model
+        # parquet per consumer
         model.userFactors.cache()
         model.itemFactors.cache()
         _ALS_CACHE[key] = (ratings, model)
@@ -775,39 +780,6 @@ def _fold_bucket():
     )
 
 
-_TRAINFOLD_CACHE: dict = {}
-
-
-def _fit_als_trainfold(spark, sf_dir):
-    """Fit (or reuse) ALS on the 80% md5-bucket train fold.
-
-    Same two memo layers as _fit_als, keyed separately
-    (als_trainfold_v1_*): the fold is a pure function of (corpus, md5
-    bucket rule), and the fit of (fold, seed) — so a staged model is
-    bit-identical to a fresh fit and carries no test-set leakage (the
-    held-out 20% never reaches the fit in either path).  Returns
-    (tagged_ratings, model) where tagged carries the bucket column `b`."""
-    from pathlib import Path
-
-    from pyspark.ml.recommendation import ALS, ALSModel
-
-    from ..io import ART_ROOT
-
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _TRAINFOLD_CACHE:
-        tagged = _ratings(spark, sf_dir).withColumn("b", _fold_bucket()).cache()
-        train = tagged.filter(F.col("b") < 80).drop("b")
-        disk = Path(ART_ROOT) / f"als_trainfold_v1_{sf_key(sf_dir)}"
-        if (disk / "_DONE").exists():
-            model = ALSModel.load(str(disk / "model"))
-        else:
-            model = ALS(**_ALS_PARAMS).fit(train)
-            model.write().overwrite().save(str(disk / "model"))
-            (disk / "_DONE").touch()
-        _TRAINFOLD_CACHE[key] = (tagged, model)
-    return _TRAINFOLD_CACHE[key]
-
-
 @register("rec_eval_recall")  # rows-only: ML quality metric
 def rec_eval_recall(spark, sf_dir):
     """Offline recommender evaluation: hash-split interactions 80/20,
@@ -834,7 +806,7 @@ def rec_eval_recall(spark, sf_dir):
     under the cap, so fold, metric and determinism gates are unchanged
     there; past the cap the reported n_users_eval/n_test say exactly
     what was measured."""
-    tagged, model = _fit_als_trainfold(spark, sf_dir)
+    tagged, model = _fit_als(spark, sf_dir, train_fold=True)
     test = tagged.filter(F.col("b") >= 80).drop("b")
 
     EVAL_MAX_USERS = 30_000

@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from ..canon import md5_int, r4, sql_md5_int
-from ..io import ART_ROOT as ART, load_table, sf_key
+from ..io import ART_ROOT as ART, load_table, sf_key, stage
 from ..registry import register
 
 
@@ -215,20 +215,19 @@ def scan_schema_evolution(spark, sf_dir):
     schemas widen over time and the scan must reconcile footers per file,
     never rewrite history.  Batches are path-pinned per sf_dir and
     immutable once written."""
-    from pathlib import Path
 
-    root = Path(ART) / f"schema_evo_{sf_key(sf_dir)}"
-    if not (root / "_DONE").exists():
+    def build(root):
         o = load_table(spark, sf_dir, "orders")
         # "old" batch: even keys, original narrow schema
         o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(str(root / "data" / "batch=0"))
+        ).write.parquet(str(root / "data" / "batch=0"))
         # "new" batch: odd keys, widened schema
         o.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(str(root / "data" / "batch=1"))
-        (root / "_DONE").touch()
+        ).write.parquet(str(root / "data" / "batch=1"))
+
+    root = stage(f"schema_evo_{sf_key(sf_dir)}", build)
     return (
         spark.read.option("mergeSchema", "true")
         .option("recursiveFileLookup", "true")
@@ -296,18 +295,12 @@ def scan_csv_malformed(spark, sf_dir):  # engine-specific by design
     PERMISSIVE quarantines bad rows into a column (auditable, re-parsable)
     instead of failing the job (FAILFAST) or silently dropping
     (DROPMALFORMED).  Counts are asserted in tests/test_properties.py."""
-    from pathlib import Path
-
     from pyspark.sql import types as T
 
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    path = Path(ART) / f"scan_csv_malformed_{sf_key(sf_dir)}"
-    if not (path / "_DONE").exists():
-        src.coalesce(1).write.mode("overwrite").option("header", True).csv(
-            str(path / "data")
-        )
+    def build(path):
+        load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        ).coalesce(1).write.option("header", True).csv(str(path / "data"))
         # separate file (never append: hadoop's local-FS .crc checksum
         # would reject the modified part file); header=True strips line 1
         (path / "data" / "malformed.csv").write_text(
@@ -316,7 +309,8 @@ def scan_csv_malformed(spark, sf_dir):  # engine-specific by design
             "1,2\n"  # wrong arity
             "x,y,z,extra,cols\n"  # wrong arity + bad types
         )
-        (path / "_DONE").touch()
+
+    path = stage(f"scan_csv_malformed_{sf_key(sf_dir)}", build)
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -402,23 +396,17 @@ def sink_compact(spark, sf_dir):
     scan task counts sane: target 128-512 MB files via
     spark.sql.files.maxRecordsPerFile + coalesce, never a full shuffle
     (coalesce merges map-side)."""
-    from pathlib import Path
 
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    root = Path(ART) / f"sink_compact_{sf_key(sf_dir)}"
-    frag, compact = root / "frag", root / "compact"
-    if not (root / "_DONE").exists():
-        src.repartition(64).write.mode("overwrite").parquet(str(frag))
-        (
-            spark.read.parquet(str(frag))
-            .coalesce(4)
-            .write.mode("overwrite")
-            .parquet(str(compact))
+    def build(root):
+        load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        ).repartition(64).write.parquet(str(root / "frag"))
+        spark.read.parquet(str(root / "frag")).coalesce(4).write.parquet(
+            str(root / "compact")
         )
-        (root / "_DONE").touch()
-    return spark.read.parquet(str(compact))
+
+    root = stage(f"sink_compact_{sf_key(sf_dir)}", build)
+    return spark.read.parquet(str(root / "compact"))
 
 
 @register("scan_binary_files")  # rows-only: oracle SQL cannot parameterize
@@ -676,18 +664,17 @@ def scan_file_prune_proof(spark, sf_dir):
     100 TB: the measured quantity IS the scale story — a month-
     partitioned layout turns a month query from a full-corpus scan into
     1/|months| of the files, before any row is read."""
-    from pathlib import Path
 
-    root = Path(ART) / f"prune_proof_{sf_key(sf_dir)}"
-    if not (root / "_DONE").exists():
+    def build(root):
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", F.month("o_orderdate").alias("m")
         )
         # one task per month value -> exactly one file per hive dir
-        o.repartition(F.col("m")).write.mode("overwrite").partitionBy(
-            "m"
-        ).parquet(str(root / "data"))
-        (root / "_DONE").touch()
+        o.repartition(F.col("m")).write.partitionBy("m").parquet(
+            str(root / "data")
+        )
+
+    root = stage(f"prune_proof_{sf_key(sf_dir)}", build)
 
     def scan_num_files(df):
         """Execute df and read the scan's runtime numFiles metric."""
@@ -814,28 +801,27 @@ def scan_time_travel(spark, sf_dir):
     design; at thousands of commits you checkpoint the action set, same
     replay contract), and the snapshot read plans only the live files,
     so pruning/pushdown apply per-file as in any parquet scan.  The
-    staged table is path-pinned per sf_dir and immutable once the _DONE
-    marker lands (FIXTURES.md discipline)."""
+    staged table is path-pinned per sf_dir and immutable once published
+    (FIXTURES.md discipline)."""
     import json
-    from pathlib import Path
 
-    root = Path(ART) / f"time_travel_{sf_key(sf_dir)}"
-    if not (root / "_DONE").exists():
+    def build(root):
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
-        o.filter(F.col("o_orderkey") % 4 != 3).write.mode(
-            "overwrite"
-        ).parquet(str(root / "data" / "A"))
-        o.filter(F.col("o_orderkey") % 4 == 3).write.mode(
-            "overwrite"
-        ).parquet(str(root / "data" / "B"))
+        o.filter(F.col("o_orderkey") % 4 != 3).write.parquet(
+            str(root / "data" / "A")
+        )
+        o.filter(F.col("o_orderkey") % 4 == 3).write.parquet(
+            str(root / "data" / "B")
+        )
         log = root / "_log"
-        log.mkdir(parents=True, exist_ok=True)
+        log.mkdir()
         (log / "1.json").write_text(json.dumps({"add": ["data/A"]}))
         (log / "2.json").write_text(json.dumps({"add": ["data/B"]}))
         (log / "3.json").write_text(json.dumps({"remove": ["data/A"]}))
-        (root / "_DONE").touch()
+
+    root = stage(f"time_travel_{sf_key(sf_dir)}", build)
 
     def live_files(version: int) -> list[str]:
         live: list[str] = []
@@ -985,11 +971,9 @@ def layout_sorted_runs(spark, sf_dir):
     |intersecting bands|/|bands| of the corpus regardless of table
     size.  The dual of layout_zorder: zorder picks the clustering KEY,
     this op builds the clustered layout and proves the skip."""
-    from pathlib import Path
 
-    root = Path(ART) / f"sorted_runs_{sf_key(sf_dir)}"
-    day0 = F.lit("1995-01-01").cast("date")
-    if not (root / "_DONE").exists():
+    def build(root):
+        day0 = F.lit("1995-01-01").cast("date")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderdate",
@@ -1007,12 +991,11 @@ def layout_sorted_runs(spark, sf_dir):
         (
             o.repartition(F.col("run"), F.col("band"))
             .sortWithinPartitions("o_orderdate")
-            .write.mode("overwrite")
-            .partitionBy("run", "band")
+            .write.partitionBy("run", "band")
             .parquet(str(root / "data"))
         )
-        (root / "_DONE").touch()
 
+    root = stage(f"sorted_runs_{sf_key(sf_dir)}", build)
     full = spark.read.parquet(str(root / "data"))
     manifest = (
         full.groupBy("run", "band")

@@ -24,7 +24,7 @@ from ..blockkernel import (
     stream_tile_budget,
     topk_by_value_then_id,
 )
-from ..io import load_table, sf_key
+from ..io import load_table, sf_key, stage
 from ..registry import register
 
 _SQL_DOT_QC = """
@@ -921,18 +921,9 @@ def _cell_centroids(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from pathlib import Path
-
-    from ..io import ART_ROOT
-
     key = (id(spark.sparkContext), sf_dir, "ivf_cells")
     if key in _PQ_CACHE:
         return _PQ_CACHE[key]
-    disk = Path(ART_ROOT) / f"ivf_cells_{sf_key(sf_dir)}.npy"
-    if disk.exists():
-        cells = np.load(disk)
-        _PQ_CACHE[key] = cells
-        return cells
 
     def partials(batches):
         sums: dict = {}
@@ -955,23 +946,25 @@ def _cell_centroids(spark, sf_dir):
                 }
             )
 
-    rows = (
-        _pq_emb(spark, sf_dir)
-        .mapInPandas(partials, "label int, s array<double>, c bigint")
-        .collect()
-    )
-    n_labels = max(r["label"] for r in rows) + 1
-    dim = len(rows[0]["s"])
-    cells = np.zeros((n_labels, dim))
-    counts = np.zeros(n_labels, dtype=np.int64)
-    for r in sorted(rows, key=lambda r: (r["label"], r["c"], r["s"])):
-        cells[r["label"]] += np.asarray(r["s"])
-        counts[r["label"]] += r["c"]
-    nz = counts > 0
-    cells[nz] /= counts[nz][:, None]
+    def build(root):
+        rows = (
+            _pq_emb(spark, sf_dir)
+            .mapInPandas(partials, "label int, s array<double>, c bigint")
+            .collect()
+        )
+        n_labels = max(r["label"] for r in rows) + 1
+        dim = len(rows[0]["s"])
+        cells = np.zeros((n_labels, dim))
+        counts = np.zeros(n_labels, dtype=np.int64)
+        for r in sorted(rows, key=lambda r: (r["label"], r["c"], r["s"])):
+            cells[r["label"]] += np.asarray(r["s"])
+            counts[r["label"]] += r["c"]
+        nz = counts > 0
+        cells[nz] /= counts[nz][:, None]
+        np.save(root / "cells.npy", cells)
+
+    cells = np.load(stage(f"ivf_cells_{sf_key(sf_dir)}", build) / "cells.npy")
     _PQ_CACHE[key] = cells
-    disk.parent.mkdir(parents=True, exist_ok=True)
-    np.save(disk, cells)
     return cells
 
 
@@ -1012,90 +1005,79 @@ def _pq_train(spark, sf_dir, M=8, SUB=8, K=16, iters=8, residual=False):
     import numpy as np
     import pandas as pd
 
-    from pathlib import Path
-
-    import numpy as _np
-
-    from ..io import ART_ROOT
-
     key = (id(spark.sparkContext), sf_dir, M, SUB, K, iters, residual)
     if key in _PQ_CACHE:
         return _PQ_CACHE[key]
     # disk layer under the session cache: the codebook is deterministic for
     # a corpus, tiny (M*K*SUB doubles = 8 KiB), and costs ~8 Spark jobs to
     # fit — the same artifact rationale as disk_memo, stored as .npy
-    tag = "_res" if residual else ""
-    disk = (
-        Path(ART_ROOT)
-        / f"pq_codebook_v{M}x{SUB}_{K}_{iters}{tag}_{sf_key(sf_dir)}.npy"
-    )
-    if disk.exists():
-        cents = _np.load(disk)
-        _PQ_CACHE[key] = cents
-        return cents
-    sc = spark.sparkContext
-    cells = _cell_centroids(spark, sf_dir) if residual else None
-    bc_cells = sc.broadcast(cells) if residual else None
+    def build(root):
+        sc = spark.sparkContext
+        cells = _cell_centroids(spark, sf_dir) if residual else None
+        bc_cells = sc.broadcast(cells) if residual else None
 
-    def as_train_X(pdf):
-        X = np.asarray(pdf["x"].to_list(), dtype=np.float64)
+        def as_train_X(pdf):
+            X = np.asarray(pdf["x"].to_list(), dtype=np.float64)
+            if residual:
+                labs = np.asarray(pdf["label"].to_list(), dtype=np.int64)
+                X = X - bc_cells.value[labs]
+            return X
+
+        emb = _pq_emb(spark, sf_dir)
+        init = emb.orderBy("vec_id").limit(K).collect()
+        init_X = np.asarray([r["x"] for r in init], dtype=np.float64)
         if residual:
-            labs = np.asarray(pdf["label"].to_list(), dtype=np.int64)
-            X = X - bc_cells.value[labs]
-        return X
+            init_X = init_X - cells[
+                np.asarray([r["label"] for r in init], dtype=np.int64)
+            ]
+        cents = init_X.reshape(K, M, SUB).transpose(1, 0, 2).copy()  # (M, K, SUB)
 
-    emb = _pq_emb(spark, sf_dir)
-    init = emb.orderBy("vec_id").limit(K).collect()
-    init_X = np.asarray([r["x"] for r in init], dtype=np.float64)
-    if residual:
-        init_X = init_X - cells[
-            np.asarray([r["label"] for r in init], dtype=np.int64)
-        ]
-    cents = init_X.reshape(K, M, SUB).transpose(1, 0, 2).copy()  # (M, K, SUB)
+        for _ in range(iters):
+            bc = sc.broadcast(cents)
 
-    for _ in range(iters):
-        bc = sc.broadcast(cents)
+            def partials(batches):
+                C = bc.value
+                sums = np.zeros((M, K, SUB))
+                cnts = np.zeros((M, K), dtype=np.int64)
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    X = as_train_X(pdf)
+                    for m in range(M):
+                        S = X[:, m * SUB:(m + 1) * SUB]
+                        d = ((S[:, None, :] - C[m][None, :, :]) ** 2).sum(-1)
+                        a = d.argmin(axis=1)  # ties -> lowest code: deterministic
+                        np.add.at(sums[m], a, S)
+                        np.add.at(cnts[m], a, 1)
+                yield pd.DataFrame(
+                    {"s": [sums.ravel().tolist()], "c": [cnts.ravel().tolist()]}
+                )
 
-        def partials(batches):
-            C = bc.value
-            sums = np.zeros((M, K, SUB))
-            cnts = np.zeros((M, K), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = as_train_X(pdf)
-                for m in range(M):
-                    S = X[:, m * SUB:(m + 1) * SUB]
-                    d = ((S[:, None, :] - C[m][None, :, :]) ** 2).sum(-1)
-                    a = d.argmin(axis=1)  # ties -> lowest code: deterministic
-                    np.add.at(sums[m], a, S)
-                    np.add.at(cnts[m], a, 1)
-            yield pd.DataFrame(
-                {"s": [sums.ravel().tolist()], "c": [cnts.ravel().tolist()]}
-            )
+            rows = emb.mapInPandas(
+                partials, "s array<double>, c array<bigint>"
+            ).collect()
+            # fold partials in a canonical order: float-add order is fixed
+            rows = sorted(rows, key=lambda r: (r["c"], r["s"]))
+            tot_s = np.zeros(M * K * SUB)
+            tot_c = np.zeros(M * K, dtype=np.int64)
+            for r in rows:
+                tot_s += np.asarray(r["s"])
+                tot_c += np.asarray(r["c"], dtype=np.int64)
+            tot_s = tot_s.reshape(M, K, SUB)
+            tot_c = tot_c.reshape(M, K)
+            nz = tot_c > 0
+            new = cents.copy()
+            new[nz] = tot_s[nz] / tot_c[nz][:, None]
+            bc.destroy()
+            if np.array_equal(new, cents):
+                break
+            cents = new
+        np.save(root / "codebook.npy", cents)
 
-        rows = emb.mapInPandas(
-            partials, "s array<double>, c array<bigint>"
-        ).collect()
-        # fold partials in a canonical order: float-add order is fixed
-        rows = sorted(rows, key=lambda r: (r["c"], r["s"]))
-        tot_s = np.zeros(M * K * SUB)
-        tot_c = np.zeros(M * K, dtype=np.int64)
-        for r in rows:
-            tot_s += np.asarray(r["s"])
-            tot_c += np.asarray(r["c"], dtype=np.int64)
-        tot_s = tot_s.reshape(M, K, SUB)
-        tot_c = tot_c.reshape(M, K)
-        nz = tot_c > 0
-        new = cents.copy()
-        new[nz] = tot_s[nz] / tot_c[nz][:, None]
-        bc.destroy()
-        if np.array_equal(new, cents):
-            break
-        cents = new
+    tag = "_res" if residual else ""
+    root = stage(f"pq_codebook_v{M}x{SUB}_{K}_{iters}{tag}_{sf_key(sf_dir)}", build)
+    cents = np.load(root / "codebook.npy")
     _PQ_CACHE[key] = cents
-    disk.parent.mkdir(parents=True, exist_ok=True)
-    _np.save(disk, cents)
     return cents
 
 

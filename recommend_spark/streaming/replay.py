@@ -23,7 +23,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window as W
 
-from ..io import ART_ROOT, load_table, sf_key
+from ..io import ART_ROOT, load_table, sf_key, stage
 
 ART = Path(ART_ROOT)
 N_CHUNKS = 8
@@ -39,32 +39,26 @@ def materialize_chunks(spark: SparkSession, sf_dir: str, shuffled: bool = False)
     out-of-order permutation for late-data tests).  Sequential writes give
     monotone mod-times, which fixes the FileStreamSource replay order."""
     tag = sf_key(sf_dir) + ("_shuffled" if shuffled else "")
-    root = ART / f"stream_src_{tag}"
-    done = root / "_DONE"
-    if done.exists():
-        return str(root)
-    if root.exists():
-        shutil.rmtree(root)
-    root.mkdir(parents=True)
-    ev = load_table(spark, sf_dir, "events")
-    chunked = ev.withColumn(
-        "chunk", F.ntile(N_CHUNKS).over(W.orderBy("ts", "event_id")) - 1
-    ).cache()
-    order = list(range(N_CHUNKS))
-    if shuffled:
-        # deterministic permutation: late chunks interleaved
-        order = [0, 2, 1, 4, 3, 6, 5, 7]
-    for i, c in enumerate(order):
-        (
-            chunked.filter(F.col("chunk") == c)
-            .drop("chunk")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(root / f"chunk_{i:02d}"))
-        )
-    chunked.unpersist()
-    done.touch()
-    return str(root)
+
+    def build(root):
+        ev = load_table(spark, sf_dir, "events")
+        chunked = ev.withColumn(
+            "chunk", F.ntile(N_CHUNKS).over(W.orderBy("ts", "event_id")) - 1
+        ).cache()
+        order = list(range(N_CHUNKS))
+        if shuffled:
+            # deterministic permutation: late chunks interleaved
+            order = [0, 2, 1, 4, 3, 6, 5, 7]
+        for i, c in enumerate(order):
+            (
+                chunked.filter(F.col("chunk") == c)
+                .drop("chunk")
+                .coalesce(1)
+                .write.parquet(str(root / f"chunk_{i:02d}"))
+            )
+        chunked.unpersist()
+
+    return str(stage(f"stream_src_{tag}", build))
 
 
 def proc_scoped_dir(prefix: str) -> Path:
