@@ -10,11 +10,12 @@ Routes (upstream:app.py parity):
        body: JSON [[item_id, strength], ...]
 
 ``ThreadingHTTPServer`` gives one thread per request — same model as the
-reference's CherryPy front end.  A GET runs one Spark job (the user's rows)
-and numpy on the driver when the service's generation is a snapshot, the
-full distributed plan otherwise; Spark sessions are thread-safe for job
-submission, so concurrent GETs become concurrent jobs scheduled FIFO, and
-a retrain swaps the generation under them without tearing a read.
+reference's CherryPy front end.  What a GET costs depends on the service's
+generation (see ``serving``): numpy on the driver alone when the snapshot
+holds the base ratings, plus one Spark job for the user's rows when only
+the item factors fit the driver budget, the full distributed plan past
+it.  A retrain swaps the generation under concurrent GETs without tearing
+a read.
 """
 
 from __future__ import annotations

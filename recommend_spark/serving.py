@@ -25,15 +25,23 @@ per-write fold-in, nightly refit.
 Scale: every fit (construction, ``load()``, ``retrain()``) builds one
 immutable serving GENERATION — the cached base ratings plus what a read
 needs from the model — and swaps it in with a single assignment.  Item
-factors are frozen between fits, so when the factor matrix
-(|items| × rank × 8 B) fits ``io.BROADCAST_HINT_BUDGET`` the generation is
-a driver-side snapshot: sorted item ids, the factor matrix, YᵀY and the
-popularity mask, fetched once.  A read then runs ONE Spark job (the
-requesting user's rows from the cached base), merges the append log on
-the driver, and does the fold-in solve, the scoring and the top-N in
-numpy.  Past the budget the generation serves every read with the
-distributed plan (fold-in via ``foldin_factors``, cross-join scoring,
-popularity and seen joins, a window); the decision is logged at INFO.
+factors are frozen between fits, so a generation holds on the driver as
+much as ``io.BROADCAST_HINT_BUDGET`` allows, in three regimes:
+
+* factors and base ratings fit (|items| × rank × 8 B plus
+  |ratings| × 24 B): a driver snapshot — sorted item ids, the factor
+  matrix, YᵀY, the popularity mask and a per-user index of the base
+  rows, fetched once.  A read runs NO Spark job: it slices the user's
+  rows from the index, merges the append log, and does the fold-in
+  solve, the scoring and the top-N in numpy;
+* only the factors fit: the same snapshot without the index.  A read
+  runs ONE Spark job, the requesting user's rows from the cached base
+  (a scan of every partition, O(|ratings|)), and the rest in numpy;
+* the factors do not fit: every read runs the distributed plan (fold-in
+  via ``foldin_factors``, cross-join scoring, popularity and seen joins,
+  a window).
+
+The choice and its deciding bytes are logged at INFO.
 """
 
 from __future__ import annotations
@@ -112,11 +120,17 @@ class _Snapshot:
     """A generation served from the driver.  Reads return the same answers
     as ``_Distributed``: n_u counts only rated items that have a factor, a
     user with none gets no answer, scores sum rank terms left to right as
-    the distributed ``aggregate`` does, and ties break on item id."""
+    the distributed ``aggregate`` does, and ties break on item id.
+
+    With ``indexed`` the base ratings are held too, as ``index``: user ids,
+    item ids and strengths sorted by user id, each user's rows in the
+    cached base's row order, so a read runs no Spark job and sums a user's
+    rows in the order the one-job read would.  Without it (``index`` is
+    None) a read fetches the user's rows with one Spark job."""
 
     kind = "snapshot"
 
-    def __init__(self, ratings: DataFrame, model):
+    def __init__(self, ratings: DataFrame, model, indexed: bool):
         self.ratings, self.model = ratings, model
         itf = model.itemFactors.toPandas()  # one Arrow job
         ids = itf["id"].to_numpy(np.int64)
@@ -127,6 +141,16 @@ class _Snapshot:
         self.yty = Y.T @ Y
         popular = [r.item_id for r in _popular(ratings).collect()]
         self.popular = np.isin(self.item_ids, popular)
+        self.index = None
+        if indexed:
+            base = ratings.select("user_id", "item_id", "strength").toPandas()
+            users = base["user_id"].to_numpy(np.int64)
+            order = np.argsort(users, kind="stable")  # keeps each user's order
+            self.index = (
+                users[order],
+                base["item_id"].to_numpy(np.int64)[order],
+                base["strength"].to_numpy(np.float64)[order],
+            )
 
     def unpersist(self) -> None:
         pass
@@ -150,14 +174,23 @@ class _Snapshot:
         """user -> (fold-in factor, positions of the items they rated), for
         the users with at least one rated item that has a factor."""
         merged: dict[int, dict[int, float]] = {u: {} for u in user_ids}
-        # the ids go in as ONE array literal: codegen binds it by reference,
-        # so every read reuses one compiled filter, where an int literal is
-        # inlined into the generated Java and compiles once per user id
-        base = (
-            self.ratings.filter(F.array_contains(F.lit(user_ids), F.col("user_id")))
-            .select("user_id", "item_id", "strength")
-            .collect()
-        )
+        if self.index is None:
+            # one Spark job.  The ids go in as ONE array literal: codegen
+            # binds it by reference, so every read reuses one compiled
+            # filter, where an int literal is inlined into the generated
+            # Java and compiles once per user id
+            base = (
+                self.ratings.filter(F.array_contains(F.lit(user_ids), F.col("user_id")))
+                .select("user_id", "item_id", "strength")
+                .collect()
+            )
+        else:
+            users, items, strengths = self.index
+            base = []
+            for u in merged:
+                lo, hi = users.searchsorted(u), users.searchsorted(u, "right")
+                base += zip(users[lo:hi].tolist(), items[lo:hi].tolist(),
+                            strengths[lo:hi].tolist())
         for u, i, s in [*base, *extra_rows]:
             if u in merged:  # strengths per (user, item) sum, as _merge does
                 merged[u][i] = merged[u].get(i, 0.0) + s
@@ -254,19 +287,24 @@ class _Distributed:
 
 def _generation(ratings: DataFrame, model):
     """The serving generation for one (base ratings, model) pair: a driver
-    snapshot when the item-factor matrix fits the broadcast budget, the
-    distributed path otherwise."""
+    snapshot when the item-factor matrix fits the broadcast budget, indexed
+    when the base ratings fit beside it, the distributed path otherwise."""
     n_items = model.itemFactors.count()
     factor_bytes = n_items * model.rank * 8
     budget = io.BROADCAST_HINT_BUDGET
-    gen = (
-        _Snapshot(ratings, model)
-        if factor_bytes <= budget
-        else _Distributed(ratings, model, n_items)
-    )
+    if factor_bytes <= budget:
+        n_rows = ratings.count()
+        index_bytes = n_rows * 24  # user and item ids as int64, strength as float64
+        indexed = factor_bytes + index_bytes <= budget
+        gen = _Snapshot(ratings, model, indexed)
+        rows = "from a driver index" if indexed else "by one Spark job per read"
+        rows += f" ({n_rows} rows, index {index_bytes} B)"
+    else:
+        gen, rows = _Distributed(ratings, model, n_items), "by the distributed plan"
     log.info(
-        "serving generation: %s path (%d items, factors %d B, budget %d B)",
-        gen.kind, n_items, factor_bytes, budget,
+        "serving generation: %s path (%d items, factors %d B, budget %d B),"
+        " user rows %s",
+        gen.kind, n_items, factor_bytes, budget, rows,
     )
     return gen
 

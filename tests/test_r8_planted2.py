@@ -24,6 +24,7 @@ from __future__ import annotations
 import hashlib
 from datetime import datetime
 
+from recommend_spark import io
 from recommend_spark.queries import QUERIES
 
 _ORDERS_SCHEMA = (
@@ -96,7 +97,8 @@ def test_dp_counts_noise_exact_and_suppression(spark, tmp_path_factory):
     assert out["big"]["noisy_n"] == max(30 + noise, 0)
 
 
-def test_time_travel_replay(spark, tmp_path_factory):
+def test_time_travel_replay(spark, tmp_path_factory, tmp_path, monkeypatch):
+    monkeypatch.setattr(io, "ART_ROOT", str(tmp_path))  # a per-run corpus
     root = tmp_path_factory.mktemp("tt")
     sf_dir = _orders_dir(spark, root, n=8)
     rows = QUERIES["scan_time_travel"](spark, sf_dir).collect()

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+from recommend_spark import io
 from recommend_spark.queries import QUERIES
 
 _EVENTS_SCHEMA = (
@@ -31,7 +32,10 @@ def _events_dir(spark, root, rows):
     return str(d)
 
 
-def test_session_ttl_planted_expiry_and_open_state(spark, tmp_path_factory):
+def test_session_ttl_planted_expiry_and_open_state(
+    spark, tmp_path_factory, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(io, "ART_ROOT", str(tmp_path))  # a per-run corpus
     t0 = datetime(2020, 1, 1, 0, 0, 0)
 
     def ev(eid, uid, minutes):
@@ -60,11 +64,15 @@ def test_session_ttl_planted_expiry_and_open_state(spark, tmp_path_factory):
     # user 2 emitted nothing: the open session survived as state
 
 
-def test_sf_key_distinguishes_same_basename_dirs(spark, tmp_path_factory):
+def test_sf_key_distinguishes_same_basename_dirs(
+    spark, tmp_path_factory, tmp_path, monkeypatch
+):
     """Two corpora whose dirs share a basename must get DIFFERENT staged
     artifacts: sink_compact on corpus A then on corpus B (same basename,
     different content) must each round-trip its own rows."""
     from recommend_spark.io import load_table, sf_key
+
+    monkeypatch.setattr(io, "ART_ROOT", str(tmp_path))  # per-run corpora
 
     ra = tmp_path_factory.mktemp("ka") / "sfX"
     rb = tmp_path_factory.mktemp("kb") / "sfX"

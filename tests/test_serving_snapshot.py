@@ -1,7 +1,9 @@
 """Serving generations: the driver-side snapshot must answer exactly as the
 distributed path it replaces, through the append log, a retrain and a
-warm start; a retrain must swap generations atomically; and a factor
-matrix past the byte budget must fall back to the distributed path."""
+warm start; its per-user index must serve reads with no Spark job, and
+base ratings past the byte budget must keep the one-job read with the same
+answers; a retrain must swap generations atomically; and a factor matrix
+past the byte budget must fall back to the distributed path."""
 
 from __future__ import annotations
 
@@ -115,12 +117,13 @@ def test_snapshot_matches_distributed_across_states(spark, fresh, users, tmp_pat
     assert_same(gen.scores_for(extra, pending, items), want, pending, "scores_for")
     assert svc.top_ratings(NEW_USER, 5), "a brand-new user is served by fold-in"
 
-    # the public routes: one Spark job per read, and the edge answers
+    # the public routes: no Spark job per read, and the edge answers
+    assert gen.index is not None
     u = users[0]
     top = []
-    assert jobs_of(spark, lambda: top.extend(svc.top_ratings(u, 10))) == 1
+    assert jobs_of(spark, lambda: top.extend(svc.top_ratings(u, 10))) == 0
     assert top == gen.top(extra, [u], 10)[u]
-    assert jobs_of(spark, lambda: svc.ratings_for_items(u, [top[0]["item_id"]])) == 1
+    assert jobs_of(spark, lambda: svc.ratings_for_items(u, [top[0]["item_id"]])) == 0
     assert svc.top_ratings(u, 0) == [] == ref.top(extra, [u], 0).get(u, [])
     assert svc.ratings_for_items(u, [NO_FACTOR_ITEM]) == []
     assert svc.top_ratings(EMPTY_USER, 10) == []
@@ -163,11 +166,75 @@ def test_budget_overflow_falls_back_to_distributed(
     assert "distributed path" in rec.getMessage()
     assert f"factors {gen.n_items * gen.model.rank * 8} B, budget 0 B" in rec.getMessage()
 
-    snap = serving._Snapshot(gen.ratings, gen.model)
+    snap = serving._Snapshot(gen.ratings, gen.model, True)
     assert_same(gen.top([], users, 10), snap.top([], users, 10), users, "fallback")
     u = users[0]
     assert_same({u: svc.top_ratings(u, 10)}, snap.top([], [u], 10), [u], "route")
     gen.unpersist()
+
+
+def test_index_past_budget_keeps_one_job_read(
+    spark, fresh, users, tmp_path, monkeypatch, caplog
+):
+    """Base ratings that do not fit beside the factors keep the snapshot
+    without its index: the log says so with both byte figures, a read runs
+    one Spark job, and every answer equals the indexed generation's over
+    the same base and model, scores included, through the append log, a
+    retrain and a warm start.  The retrain hands back the loaded model, so
+    the factors still fill the budget exactly."""
+    from pyspark.ml.recommendation import ALS
+
+    _, path = fresh
+    indexed = RecommendationService.load(spark, SF_DIR, path)._gen
+    factor_bytes = len(indexed.item_ids) * indexed.model.rank * 8
+    index_bytes = sum(a.nbytes for a in indexed.index)
+    assert index_bytes == indexed.ratings.count() * 24
+    monkeypatch.setattr(io, "BROADCAST_HINT_BUDGET", factor_bytes)
+    with caplog.at_level(logging.INFO, logger="recommend_spark.serving"):
+        svc = RecommendationService.load(spark, SF_DIR, path)
+    (rec,) = [r for r in caplog.records if r.name == "recommend_spark.serving"]
+    msg = rec.getMessage()
+    assert "snapshot path" in msg and "user rows by one Spark job per read" in msg
+    assert f"factors {factor_bytes} B, budget {factor_bytes} B" in msg
+    assert f"index {index_bytes} B" in msg
+
+    items = list(range(0, 220, 3)) + [NO_FACTOR_ITEM]
+
+    def assert_as_indexed(svc, pending, what):
+        gen, extra = svc._state()
+        assert gen.kind == "snapshot" and gen.index is None, what
+        ref = serving._Snapshot(gen.ratings, gen.model, True)
+        top = gen.top(extra, pending, 10)
+        assert sum(1 for u in pending if top.get(u)) > len(pending) // 2, what
+        assert top == ref.top(extra, pending, 10), what
+        assert gen.scores_for(extra, pending, items) == ref.scores_for(
+            extra, pending, items
+        ), what
+
+    assert_as_indexed(svc, users, "empty log")
+    u = users[0]
+    assert jobs_of(spark, lambda: svc.top_ratings(u, 10)) == 1
+    assert jobs_of(spark, lambda: svc.ratings_for_items(u, [1])) == 1
+
+    svc.add_ratings(
+        [
+            (NEW_USER, 1, 3.0),
+            (NEW_USER, 2, 1.0),
+            (EMPTY_USER, NO_FACTOR_ITEM, 4.0),
+            (users[0], NO_FACTOR_ITEM, 5.0),
+            (users[1], 7, 2.0),
+        ]
+    )
+    pending = users + [NEW_USER, EMPTY_USER]
+    assert_as_indexed(svc, pending, "non-empty log")
+    monkeypatch.setattr(ALS, "fit", lambda self, *a, **kw: indexed.model)
+    svc.retrain()
+    assert svc.pending_foldin_backlog == 0
+    assert_as_indexed(svc, pending, "after retrain")
+    svc.add_ratings([(users[2], 5, 1.0)])
+    svc.save(str(tmp_path / "model"))
+    warm = RecommendationService.load(spark, SF_DIR, str(tmp_path / "model"))
+    assert_as_indexed(warm, pending, "after save/load")
 
 
 def test_retrain_swaps_generation_atomically(spark, fresh, monkeypatch):
