@@ -7,7 +7,7 @@ first (``pq.read_table``), so it is bounded by driver RAM:
 
     bytes = N_candidates × dim × 8   (float64)
 
-At the fixtures' 64-dim embeddings the default 2 GiB budget corresponds to
+At the fixtures' 64-dim embeddings the 2 GiB budget corresponds to
 N ≈ 4.2M candidate vectors; a 100 TB corpus is far past it.  Callers check
 ``block_kernel_fits`` (a parquet FOOTER read — row count only, no data) and
 route oversized candidate sides to their bucketed cogroup fallback, which
@@ -23,9 +23,10 @@ import os
 
 import pyarrow.parquet as pq
 
-#: Driver-RAM budget for a staged candidate matrix (override for tests /
-#: small drivers via SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES).
-DEFAULT_MAX_BYTES = 2 << 30
+#: Driver-RAM budget for a staged candidate matrix.  Read at call time as
+#: ``blockkernel.MAX_STAGED_BYTES``, so tests force the bucketed paths by
+#: patching this attribute.
+MAX_STAGED_BYTES = 2 << 30
 
 #: Upper bound on fallback bucket count: replication cost of the bucketed
 #: paths grows linearly with it, and past ~64 the per-bucket block is small
@@ -42,21 +43,15 @@ def candidate_matrix_bytes(parquet_path: str, dim: int) -> int:
     return n * dim * 8
 
 
-def max_staged_bytes() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", DEFAULT_MAX_BYTES)
-    )
-
-
 def block_kernel_fits(parquet_path: str, dim: int) -> bool:
     """True if the candidate side may be staged on the driver + broadcast."""
-    return candidate_matrix_bytes(parquet_path, dim) <= max_staged_bytes()
+    return candidate_matrix_bytes(parquet_path, dim) <= MAX_STAGED_BYTES
 
 
 def fallback_buckets(parquet_path: str, dim: int) -> int:
     """Bucket count for the cogroup fallback: each bucket's candidate block
     stays within the staging budget, capped at MAX_BUCKETS."""
-    b = math.ceil(candidate_matrix_bytes(parquet_path, dim) / max_staged_bytes())
+    b = math.ceil(candidate_matrix_bytes(parquet_path, dim) / MAX_STAGED_BYTES)
     return max(1, min(MAX_BUCKETS, b))
 
 
@@ -83,7 +78,7 @@ def collected_toks_bytes(n_rows: int, n_tokens: int) -> int:
 #: executors drop their blocks and any straggler plan that still
 #: references the broadcast refetches from the driver (``destroy()``
 #: would hard-break such a plan).  Bounded small: entries are
-#: budget-gated (≤ max_staged_bytes each).
+#: budget-gated (≤ MAX_STAGED_BYTES each).
 _BC_MEMO: dict = {}
 _BC_MEMO_MAX = 4
 _BC_MEMO_APP: str | None = None
@@ -158,24 +153,18 @@ def staged_embeddings_broadcast(sc, path: str):
 #: not compute.  Tiling the STREAM axis keeps every task in the regime that
 #: measures at law, and is free of semantic risk: each (stream, candidate)
 #: pair's k-fold runs intact inside exactly one tile, so output is
-#: bit-identical at any tile size.  Override: SPARK_GRAFT_STREAM_TILE_BYTES.
+#: bit-identical at any tile size.
 #: The budget bounds the PEAK live set, not one buffer: a kernel invocation
 #: concurrently holds the acc block, the reused tmp block
 #: (``index_ordered_dot_block``) and up to two consumer temporaries
 #: (np.where / negation copies, boolean masks), so the tile step divides the
-#: budget by LIVE_BUFFERS_PER_TILE.  The default keeps the effective step
+#: budget by LIVE_BUFFERS_PER_TILE.  256 MiB keeps the effective step
 #: identical to the r13-measured 64 MB-per-buffer tiling (256 MB / 4).
+#: Callers read ``blockkernel.STREAM_TILE_BYTES`` DRIVER-side at plan build
+#: and close the value over into the kernel udf, so a patched value reaches
+#: the Python workers.
 LIVE_BUFFERS_PER_TILE = 4
-DEFAULT_STREAM_TILE_BYTES = 256 << 20
-
-
-def stream_tile_budget() -> int:
-    """Read DRIVER-side at plan build and closed over into the kernel udf —
-    worker processes don't see env mutations made after session start, so
-    the env override must be resolved before the closure ships."""
-    return int(
-        os.environ.get("SPARK_GRAFT_STREAM_TILE_BYTES", DEFAULT_STREAM_TILE_BYTES)
-    )
+STREAM_TILE_BYTES = 256 << 20
 
 
 def iter_stream_tiles(ids, mat, n_candidates: int, budget_bytes: int):
@@ -273,7 +262,7 @@ def bitset_gemm_pairs(
     |V|-bit incidence vector and the exact intersection size of every
     pair is one matrix product: ``n_common = A_bits @ B_bits.T``.  The
     index side ships as an N×V float32 incidence matrix via torrent
-    broadcast (callers gate on ``max_staged_bytes``; float32 at the
+    broadcast (callers gate on ``MAX_STAGED_BYTES``; float32 at the
     source so each python worker holds exactly ONE gated-size copy —
     the in-kernel transpose is a numpy view, and a uint8 transport
     would re-materialize a per-partition float32 cast on top of it).
@@ -293,7 +282,7 @@ def bitset_gemm_pairs(
       stream_df: DataFrame (id long, nt long, toks array<string>) —
         each streamed document's distinct tokens.
       index_rows: list of (id, nt, toks-list) rows (already collected;
-        the caller gates the size against ``max_staged_bytes``).
+        the caller gates the size against ``MAX_STAGED_BYTES``).
       vocab_map: dict token -> bit index over the WHOLE corpus
         vocabulary (caller gates len(vocab_map) ≤ 1024).
       metric: 'containment' (n_common / nt_stream) or
@@ -442,7 +431,7 @@ def bitset_gemm_pairs_within_budget(
 
     ``index_df`` has the stream side's columns (id long, nt long, toks
     array<string>); the output contract is ``bitset_gemm_pairs``'."""
-    budget = max_staged_bytes()
+    budget = MAX_STAGED_BYTES
     need = max(
         n_index * len(vocab_map) * 4, collected_toks_bytes(n_index, n_index_toks)
     )
@@ -478,7 +467,7 @@ def bitset_gemm_pairs_bucketed(
     n_buckets,
 ):
     """The bitset GEMM kernel WITHOUT driver staging — for index sides
-    past ``max_staged_bytes`` (the _embed_pairs_bucketed shape): both
+    past ``MAX_STAGED_BYTES`` (the _embed_pairs_bucketed shape): both
     sides hash into B buckets, every (i, j) grid cell cogroups stream
     bucket i with index bucket j, and the cell runs the SAME
     ``_score_bitset_blocks`` scorer on matrices built executor-side from

@@ -18,12 +18,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
-from ..blockkernel import (
-    index_ordered_dot_block,
-    iter_stream_tiles,
-    stream_tile_budget,
+from .. import blockkernel
+from ..blockkernel import index_ordered_dot_block, iter_stream_tiles
+from ..io import (
+    checkpoint,
+    hint_if,
+    load_table,
+    sf_key,
+    table_file_bytes,
+    table_rows,
 )
-from ..io import checkpoint, hint_if, load_table, sf_key, table_file_bytes
 from ..registry import register
 
 _SQL_TOKS = "list_distinct(string_split(lower(text), ' '))"
@@ -383,7 +387,7 @@ def dedup_containment(spark, sf_dir):
     kernel instead: the corpus ships as an N×|V| uint8 incidence
     matrix, the A side streams through mapInPandas, and each pair's
     exact intersection is one integer-exact float32 GEMM cell
-    (blockkernel.bitset_gemm_pairs; gated on max_staged_bytes).
+    (blockkernel.bitset_gemm_pairs; gated on MAX_STAGED_BYTES).
     n_common and na are exact ints; the single division then one
     compare is bit-deterministic in both engines.
 
@@ -500,7 +504,7 @@ def _containment_pairs(
     item 5).  The staged kernel path still collects the gated-size
     corpus driver-side at build — that collect IS the broadcast
     operand's materialization (a BroadcastExchange by hand), bounded
-    by max_staged_bytes, not a gate artifact."""
+    by MAX_STAGED_BYTES, not a gate artifact."""
     if toks_expr is None:
         toks_expr = _TOKS()
     parts = _token_sigs(docs, toks_expr, stats_key=stats_key)
@@ -986,7 +990,7 @@ def dedup_embed_cosine(spark, sf_dir):
     # file-identity-memoized: shares one executor-resident copy with
     # sim_knn_join and across bench reps (r11 ADVICE, extended r12)
     bc = staged_embeddings_broadcast(spark.sparkContext, path)
-    tile_budget = stream_tile_budget()
+    tile_budget = blockkernel.STREAM_TILE_BYTES
 
     def block_pairs(batches):
         import pandas as pd
@@ -1043,7 +1047,7 @@ def _embed_pairs_bucketed(spark, sf_dir, tau):
     from ..blockkernel import fallback_buckets
 
     nb = fallback_buckets(f"{sf_dir}/embeddings.parquet", dim=64)
-    tile_budget = stream_tile_budget()
+    tile_budget = blockkernel.STREAM_TILE_BYTES
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     grid = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
     left = e.withColumn("bi", F.pmod("vec_id", F.lit(nb)).cast("int")).withColumn(
@@ -1211,22 +1215,12 @@ def _cc_min_local(e):
     return e.coalesce(1).mapInPandas(fix, schema="v long, m long")
 
 
-#: Broadcast budget for the per-round node→min-label map, in MAP ROWS
-#: (each row is two longs ≈ 16 B payload; 8M rows ≈ 128 MiB serialized —
-#: comfortably under executor memory, same philosophy as blockkernel.py's
-#: byte budget).  The map's row count is bounded by the CURRENT edge
-#: count (every mapped node appears as a src in the doubled edge set), so
-#: the gate needs no extra counting job — the loop already counts edges.
-#: Row-based rather than ``hint_if``'s byte budget: at sf0.1 the round-1
-#: map is 5.9M rows, which 16 B/row against 64 MiB would un-hint.
-_CC_BROADCAST_MAX_MAP_ROWS = 8_000_000
+#: Estimated bytes per row of the loop's node→label tables (two longs);
+#: the ``io.hint_if`` bound of a map is its exact row count times this.
+_CC_ROW_BYTES = 16
 #: Target rows per partition for the contraction loop's checkpointed
 #: tables (labels/edges are 2-3 longs/row; 2M rows ≈ tens of MB a task).
 _CC_ROWS_PER_PARTITION = 2_000_000
-
-
-def _cc_map_broadcastable(n_edges: int) -> bool:
-    return n_edges <= _CC_BROADCAST_MAX_MAP_ROWS
 
 
 def _cc_width(n_rows: int) -> int:
@@ -1241,14 +1235,17 @@ def _cc_round(e, rep, n_edges: int, rep_width: int):
     """One min-contraction round: relabel every node to min(self,
     neighbors), rewrite ``rep`` through the map, contract the edge set.
 
-    The node→label map joins with a broadcast hint ONLY when ``n_edges``
-    proves it is under the row budget (round 1 on a near-dup-dense 100 TB
-    corpus has a map as big as the node set — an unconditional hint there
-    OOMs the executors, and AQE will not override an explicit hint);
-    past the budget the joins run as plain equi-joins and AQE picks the
-    strategy.  ``rep=None`` means the identity map (round 1): every node
-    appears as a src in the doubled edge set, so rep-after-round-1 IS
-    mapv — skipping the identity relabel join AND the separate
+    The node→label map has one row per node of ``e`` (at most the node
+    set of the pair graph, never its edge count) and joins through
+    ``io.hint_if`` on that EXACT row count, which the map's checkpoint
+    returns in the job that materializes it — no extra job.  Round 1 on a
+    near-dup-dense 100 TB corpus has a map as big as the node set: an
+    unconditional hint there OOMs the executors, and AQE will not
+    override an explicit hint, so past the budget the joins run as plain
+    equi-joins and AQE picks the strategy.  ``n_edges`` (the doubled
+    edge count) only sizes the partition width.  ``rep=None`` means the
+    identity map (round 1): every node appears as a src in the doubled
+    edge set, so rep-after-round-1 IS mapv — skipping the identity relabel join AND the separate
     distinct() build of the initial rep (one shuffle of the full node
     set plus two eager checkpoints, measured 2.83 → 2.16 s at sf0.1,
     guide §2.4: remove shuffles outright).  Returns (rep', e') un-
@@ -1264,12 +1261,8 @@ def _cc_round(e, rep, n_edges: int, rep_width: int):
         )
         .coalesce(width)
     )
-    mapv, _ = checkpoint(mapv, reset_stats=True)
-    bc = _cc_map_broadcastable(n_edges)
-
-    def _hint(df):
-        return F.broadcast(df) if bc else df
-
+    mapv, n_map = checkpoint(mapv, reset_stats=True)
+    map_bytes = n_map * _CC_ROW_BYTES
     if rep is None:
         # round 1: rep was the identity, so the rewrite is mapv itself
         rep2 = mapv.select(
@@ -1277,12 +1270,16 @@ def _cc_round(e, rep, n_edges: int, rep_width: int):
         )
     else:
         rep2 = (
-            rep.join(_hint(mapv), rep.cur == mapv.v, "left")
+            rep.join(hint_if(mapv, map_bytes), rep.cur == mapv.v, "left")
             .select("orig", F.coalesce("m", "cur").alias("cur"))
             .coalesce(rep_width)
         )
-    ms = _hint(mapv.select(F.col("v").alias("sv"), F.col("m").alias("sm")))
-    md = _hint(mapv.select(F.col("v").alias("dv"), F.col("m").alias("dm")))
+    ms = hint_if(
+        mapv.select(F.col("v").alias("sv"), F.col("m").alias("sm")), map_bytes
+    )
+    md = hint_if(
+        mapv.select(F.col("v").alias("dv"), F.col("m").alias("dm")), map_bytes
+    )
     e2 = (
         e.join(ms, e.src == ms.sv)
         .join(md, e.dst == md.dv)
@@ -1317,8 +1314,8 @@ def _cc_star_pair(e, width: int):
     the symmetric form _cc_round expects.  Each star costs one exchange
     (a window min over the grouping key) plus the distinct that bounds
     the edge set — emission is at most one edge per input edge, so the
-    count never grows and the caller's edge count stays a valid upper
-    bound for the broadcast gate.  Checkpointed because the caller's
+    count never grows and the caller's edge count stays a valid bound for
+    the partition width.  Checkpointed because the caller's
     next contraction round consumes it twice (mapv groupBy + relabel
     joins)."""
     w = W.partitionBy("src")
@@ -1354,11 +1351,12 @@ def _cc_star_pair(e, width: int):
 def _cc_components(pairs):
     """Min-label connected components of an undirected pair graph
     (columns ``doc_a``, ``doc_b``), shared loop of ``dedup_cluster`` and
-    the planted-graph tests.  Returns ``(rep, rep_broadcastable)``:
-    ``rep`` maps every node that appears in a pair (``orig``) to its
-    component's min id (``cur``), or ``None`` when the pair set is
-    empty; ``rep_broadcastable`` tells the caller whether ``rep`` is
-    under the broadcast row budget for its final labeling join."""
+    the planted-graph tests.  Returns ``rep``, which maps every node that
+    appears in a pair (``orig``) to its component's min id (``cur``), or
+    ``None`` when the pair set is empty.  Every map join in the loop goes
+    through ``io.hint_if`` on an exact row count: each round's map on the
+    count its checkpoint returns (_cc_round), the local endgame's map on
+    the residual edge count, which bounds its node count."""
     # no checkpoint here: edges re-derive from the parquet pair artifact in
     # one cheap scan wherever referenced (a checkpoint of the doubled edge
     # set would cost more to materialize than every re-scan combined)
@@ -1366,14 +1364,7 @@ def _cc_components(pairs):
         "src", "dst"
     )
     # One cheap count of the (cached) pair artifact seeds the loop's
-    # broadcast gate and partition widths: the round-1 node→label map is
-    # as big as the NODE SET of the uncontracted pair graph (the "tiny
-    # after contraction" premise only holds from round 2), so the
-    # broadcast hint must be size-gated from the very first round —
-    # _cc_round hints only when the current edge count (an upper bound
-    # on map rows) is under _CC_BROADCAST_MAX_MAP_ROWS, else plain
-    # equi-joins with AQE picking the strategy.  Later rounds reuse the
-    # count the loop takes anyway.
+    # partition widths; later rounds reuse the count the loop takes anyway.
     n = 2 * pairs.count()
     # rep: original node -> current contracted label (isolated docs never
     # enter; they are unioned back with their own id at the end).  rep
@@ -1385,7 +1376,6 @@ def _cc_components(pairs):
     # the post-round-1 rep, saving one full-node-set shuffle plus two
     # eager checkpoints (2.83 → 2.16 s at sf0.1, identical labels).
     rep_width = _cc_width(n)
-    rep_broadcastable = _cc_map_broadcastable(n)
     rep = None
     # Post-contraction tables are a few thousand rows; AQE's partition
     # coalescing shrinks every loop shuffle to a handful of tasks on its
@@ -1408,15 +1398,12 @@ def _cc_components(pairs):
             # jobs per remaining round (measured: rounds 2-4 moved 3,618
             # -> 90 -> 6 -> 0 edges at sf0.1, ~0.5 s of fixed cost each).
             # A residual above the threshold keeps contracting
-            # distributed — the same contract as kcore_peel.  fm holds
-            # up to 2×|edges| rows, which can EXCEED the map-broadcast
-            # row budget (2×5M > 8M), so the hint obeys the same
-            # gate as every other broadcast in this loop instead of the
-            # old unconditional hint the budget couldn't reach.
+            # distributed — the same contract as kcore_peel.  fm has one
+            # row per residual node, at most n (every node is a src of
+            # the doubled edge set), so n bounds its hint.
             fm = _cc_min_local(e)
-            fm_hinted = F.broadcast(fm) if _cc_map_broadcastable(2 * n) else fm
             rep, _ = checkpoint(
-                rep.join(fm_hinted, rep.cur == fm.v, "left")
+                rep.join(hint_if(fm, n * _CC_ROW_BYTES), rep.cur == fm.v, "left")
                 .select("orig", F.coalesce("m", "cur").alias("cur"))
                 .coalesce(rep_width),
                 reset_stats=True,
@@ -1428,7 +1415,7 @@ def _cc_components(pairs):
         # on a path, so a high-diameter residual would otherwise pay
         # O(diameter) rounds (r14 VERDICT item 2; see _cc_star_pair)
         e = _cc_star_pair(e, _cc_width(n))
-    return rep, rep_broadcastable
+    return rep
 
 
 @register(
@@ -1473,18 +1460,22 @@ def dedup_cluster(spark, sf_dir):
     Kiveris et al. MapReduce-CC recipe), which bounds the round count
     polylogarithmically even on high-diameter components where plain
     min-contraction would pay O(diameter) rounds.  Each contraction round
-    is a groupBy + two map joins + distinct (the node→label map joins
-    with a SIZE-GATED broadcast hint — see _cc_round; round 1's map is as
-    big as the raw node set, so the hint engages only under the row
-    budget and a 100× corpus falls back to AQE-planned equi-joins with
-    partition widths derived from the edge count).  The component minimum
-    never relabels, so the fixpoint labels every node with its component's
-    min doc_id — unique, hence hash-stable.  io.checkpoint per round (not
-    just persist): the plan would otherwise embed the similarity pipeline
-    plus every prior round, and the driver OOMs just printing it.
+    is a groupBy + two map joins + distinct.  Every map join goes through
+    ``io.hint_if`` on an exact row count: round 1's map is as big as the
+    node set of the pair graph (at most |documents|: 5,000 rows at sf0.1,
+    where the doubled EDGE set has 5.9M), each map's count comes from the
+    checkpoint that materializes it, and the final labeling join's
+    ``rep`` is bounded by the documents table's footer row count (rep ⊆
+    documents).  A 100× corpus past the 64 MiB hint budget falls back to
+    AQE-planned equi-joins with partition widths derived from the edge
+    count.  The component minimum never relabels, so the fixpoint labels
+    every node with its component's min doc_id — unique, hence
+    hash-stable.  io.checkpoint per round (not just persist): the plan
+    would otherwise embed the similarity pipeline plus every prior round,
+    and the driver OOMs just printing it.
     The DuckDB oracle computes the same closure with a recursive CTE."""
     pairs = _word_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    rep, rep_broadcastable = _cc_components(pairs)
+    rep = _cc_components(pairs)
     docs = load_table(spark, sf_dir, "documents")
     if rep is None:
         # zero pairs: every doc is its own singleton cluster
@@ -1493,11 +1484,12 @@ def dedup_cluster(spark, sf_dir):
             F.col("doc_id").alias("cluster_id"),
             F.lit(True).alias("is_keeper"),
         )
-    # the final labeling join ships rep (|round-0 nodes| rows) to every
-    # doc partition — hint it under the same row budget as the loop map
-    rep_hinted = F.broadcast(rep) if rep_broadcastable else rep
+    # the final labeling join ships rep (|round-0 nodes| rows, a subset
+    # of documents) to every doc partition: the footer row count bounds it
     lab = docs.select("doc_id").join(
-        rep_hinted, docs.doc_id == rep.orig, "left"
+        hint_if(rep, table_rows(sf_dir, "documents") * _CC_ROW_BYTES),
+        docs.doc_id == rep.orig,
+        "left",
     ).select("doc_id", F.coalesce("cur", "doc_id").alias("lab"))
     return lab.select(
         "doc_id",
@@ -1574,10 +1566,9 @@ def dedup_minhash_banded(spark, sf_dir):
     Rescore shape: this corpus is boilerplate-heavy (true near-dup cliques
     of thousands of docs), so band buckets emit tens of millions of
     duplicated candidates at bench scale.  Rescoring joins the bitmask
-    signatures (_token_sigs; broadcast-hinted ONLY while the sig table
-    provably fits the staging budget, else plain joins under AQE — the
-    dedup_cluster gate rule) — a map-side popcount per candidate,
-    no token arrays in flight — then filters to J >= tau BEFORE the
+    signatures (_token_sigs; broadcast-hinted through io.hint_if on the
+    sig table's footprint, else plain joins under AQE) — a map-side
+    popcount per candidate, no token arrays in flight — then filters to J >= tau BEFORE the
     distinct, so the only shuffle after banding carries true pairs (3M at
     sf0.1), not the 49M raw candidates.  Pairs are memoized per corpus via
     the shared parquet artifact, like the exact pipeline's."""
@@ -1651,26 +1642,20 @@ def _minhash_banded_pairs_from(
     # SIZE-GATED broadcast (r11 verdict item 1): an unconditional hint
     # pins the FULL per-doc signature table into every executor — right
     # at fixture scale, a hard OOM at 1e8+ docs, and AQE cannot override
-    # an explicit hint.  Hint only when the signature footprint provably
-    # fits the staging budget (collected_toks_bytes over-estimates the
-    # sig table: rare ⊆ toks, and mask longs are within the per-row
-    # constant); past the budget the rescore joins run plain and AQE
-    # picks the strategy — the same rule as dedup_cluster's contraction
-    # broadcast and the GEMM kernels' max_staged_bytes gate.  The stats
-    # come from _token_sigs' memoized corpus footprint when a stats_key
-    # is set (job-free on a warm catalog); keyless callers pay the one
-    # tiny agg on the already-persisted tokenized corpus.
-    from ..blockkernel import collected_toks_bytes, max_staged_bytes
-
+    # an explicit hint.  io.hint_if bounds the signature footprint by
+    # collected_toks_bytes, which over-estimates the sig table (rare ⊆
+    # toks, and mask longs are within the per-row constant; 9.3 MiB at
+    # sf0.1); past the budget the rescore joins run plain and AQE picks
+    # the strategy.  The stats come from _token_sigs' memoized corpus
+    # footprint when a stats_key is set (job-free on a warm catalog);
+    # keyless callers pay the one tiny agg on the already-persisted
+    # tokenized corpus.
     if parts["stats"]["n_docs"] is not None:
         n_docs, n_toks = parts["stats"]["n_docs"], parts["stats"]["n_toks"]
     else:
         stats = parts["d"].agg(F.count("*"), F.sum("nt")).first()
         n_docs, n_toks = stats[0], stats[1] or 0
-    bc = collected_toks_bytes(n_docs, n_toks) <= max_staged_bytes()
-
-    def _hint(df):
-        return F.broadcast(df) if bc else df
+    sig_bytes = blockkernel.collected_toks_bytes(n_docs, n_toks)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("rare").alias("rare_a"),
@@ -1689,8 +1674,8 @@ def _minhash_banded_pairs_from(
     )
     inter = (popcnt + F.size(F.array_intersect("rare_a", "rare_b"))).cast("int")
     return (
-        cand.join(_hint(sa), "doc_a")
-        .join(_hint(sb), "doc_b")
+        cand.join(hint_if(sa, sig_bytes), "doc_a")
+        .join(hint_if(sb, sig_bytes), "doc_b")
         .withColumn("n_common", inter)
         .withColumn(
             "jaccard",

@@ -1323,9 +1323,10 @@ def rec_user_user(spark, sf_dir):
     unhinted (per-USER table — AQE broadcasts it while it fits; r12);
     per-user top-3 prunes via WindowGroupLimit before the final
     exchange.  Scale profile (r12 perturbed-sf1 campaign,
-    tools/scaleup_r12_cf_graph.json): Σ audience² — the inherent
-    pair-expansion work the oracle also pays — scales 10.2x for 10x
-    input (max audience 53, guard untouched); wall tracks it linearly.
+    tools/scaleup_r12_cf_graph.json at commit 9b03a2d): Σ audience² —
+    the inherent pair-expansion work the oracle also pays — scales 10.2x
+    for 10x input (max audience 53, guard untouched); wall tracks it
+    linearly.
     The guard itself is exercised under INJECTED basket skew in
     tests/test_skew_stress.py (a planted hyper-item past the cap is
     dropped before the quadratic stage; measured volume/wall in

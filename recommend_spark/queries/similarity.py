@@ -18,13 +18,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
+from .. import blockkernel
 from ..blockkernel import (
     index_ordered_dot_block,
     iter_stream_tiles,
-    stream_tile_budget,
     topk_by_value_then_id,
 )
-from ..io import load_table, sf_key, stage
+from ..io import load_table, sf_key, spread_width, stage
 from ..registry import register
 
 _SQL_DOT_QC = """
@@ -34,14 +34,6 @@ _SQL_DOT_QC = """
         i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
     (x, y) -> x + y)
 """
-
-
-def _spread_width(spark):
-    """Session-derived task width — see ``io.spread_width`` (hoisted there
-    in r14 so every spread site in the package shares one definition)."""
-    from ..io import spread_width
-
-    return spread_width(spark)
 
 
 def _dot(a, b):
@@ -145,7 +137,7 @@ def _ivf_route(spark, sf_dir, nprobe: int = _IVF_NPROBE):
     clustered corpora keep the narrow probe (wall unregressed); flat or
     ambiguous queries widen to ``_IVF_FLAT_FRAC`` of the cells (recall
     off the nprobe/ncells floor; widening can only cost wall, never
-    recall).  Measured: tools/ann_recall_r12.json.
+    recall).  Measured: tools/ann_recall_r12.json at commit 9b03a2d.
 
     At 100 TB: the centroid table is |labels|-sized and broadcast; all
     downstream candidate work shuffles on cell id only.  nprobe is the
@@ -329,7 +321,7 @@ def mm_image_pipeline(spark, sf_dir):  # not SQL-expressible
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(_spread_width(spark))
+        .repartition(spread_width(spark))
     )
 
     def encode_stage(batches):
@@ -413,7 +405,7 @@ def mm_audio_pipeline(spark, sf_dir):  # not SQL-expressible
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(_spread_width(spark))
+        .repartition(spread_width(spark))
     )
     WIN = 1024
 
@@ -517,7 +509,7 @@ def mm_video_frames(spark, sf_dir):  # not SQL-expressible
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(_spread_width(spark))
+        .repartition(spread_width(spark))
     )
     STRIDE = 5
 
@@ -620,7 +612,7 @@ def sim_knn_join(spark, sf_dir):
     # file-identity-memoized: shares one executor-resident copy with
     # dedup_embed_cosine and across bench reps (r11 ADVICE, extended r12)
     bc = staged_embeddings_broadcast(spark.sparkContext, path)
-    tile_budget = stream_tile_budget()
+    tile_budget = blockkernel.STREAM_TILE_BYTES
 
     def knn_blocks(batches):
         import pandas as pd
@@ -658,7 +650,7 @@ def sim_knn_join(spark, sf_dir):
     e = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .repartition(_spread_width(spark))
+        .repartition(spread_width(spark))
     )
     return e.mapInPandas(
         knn_blocks, "query_id long, neighbor_id long, cosine double"
@@ -681,7 +673,7 @@ def _knn_join_bucketed(spark, sf_dir, k):
     from ..blockkernel import fallback_buckets
 
     nb = fallback_buckets(f"{sf_dir}/embeddings.parquet", dim=64)
-    tile_budget = stream_tile_budget()
+    tile_budget = blockkernel.STREAM_TILE_BYTES
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cand = e.withColumn("bkt", F.pmod("vec_id", F.lit(nb)).cast("int"))
     q = e.withColumn("bkt", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
@@ -903,7 +895,7 @@ def _pq_emb(spark, sf_dir):
             "label",
             F.col("embedding").cast("array<double>").alias("x"),
         )
-        .repartition(_spread_width(spark))
+        .repartition(spread_width(spark))
     )
 
 

@@ -24,14 +24,14 @@ def test_candidate_matrix_bytes_is_footer_math():
 
 def test_threshold_flips_with_budget(monkeypatch):
     path = f"{SF_DIR}/embeddings.parquet"
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", str(1 << 40))
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1 << 40)
     assert blockkernel.block_kernel_fits(path, dim=64)
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", "1")
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1)
     assert not blockkernel.block_kernel_fits(path, dim=64)
     assert blockkernel.fallback_buckets(path, dim=64) == blockkernel.MAX_BUCKETS
     # a budget of half the matrix needs exactly 2 buckets
     half = blockkernel.candidate_matrix_bytes(path, dim=64) // 2
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", str(half))
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", half)
     assert blockkernel.fallback_buckets(path, dim=64) == 2
 
 
@@ -41,14 +41,14 @@ def _rows(df):
 
 def test_knn_join_fallback_hash_identical(spark, monkeypatch):
     broadcast = _rows(QUERIES["sim_knn_join"](spark, SF_DIR))
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", "1")
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1)
     bucketed = _rows(QUERIES["sim_knn_join"](spark, SF_DIR))
     assert broadcast == bucketed  # exact doubles: same fold, same tie-break
 
 
 def test_embed_cosine_fallback_hash_identical(spark, monkeypatch):
     broadcast = _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR))
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", "1")
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1)
     bucketed = _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR))
     assert broadcast == bucketed
 
@@ -166,7 +166,7 @@ def test_stream_tiling_identical_broadcast_paths(spark, monkeypatch):
     knn = _rows(QUERIES["sim_knn_join"](spark, SF_DIR))
     pairs = _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR))
     # ~3 stream rows per tile at the sf0.001 candidate count
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TILE_BYTES", str(3 * 2000 * 8))
+    monkeypatch.setattr(blockkernel, "STREAM_TILE_BYTES", 3 * 2000 * 8)
     assert _rows(QUERIES["sim_knn_join"](spark, SF_DIR)) == knn
     assert _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR)) == pairs
 
@@ -176,8 +176,8 @@ def test_stream_tiling_identical_bucketed_paths(spark, monkeypatch):
     bucketed route, tiny tile budget forces many stream tiles per cell."""
     knn = _rows(QUERIES["sim_knn_join"](spark, SF_DIR))
     pairs = _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR))
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", str(1 << 18))
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TILE_BYTES", "4096")
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1 << 18)
+    monkeypatch.setattr(blockkernel, "STREAM_TILE_BYTES", 4096)
     assert _rows(QUERIES["sim_knn_join"](spark, SF_DIR)) == knn
     assert _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR)) == pairs
 

@@ -6,6 +6,10 @@ so prose in docstrings and comments does not count) and compares that set
 with the rows of README's "Scale knobs" table whose "Read in" file lives
 under ``recommend_spark/``.  A knob added without a README row, or a row
 left behind after its knob is removed, fails here.
+
+It also keeps the broadcast-hint size gate single: a conditional
+``F.broadcast(x) if … else x`` outside ``io.py`` is a second rule beside
+``io.hint_if`` and fails here.
 """
 
 from __future__ import annotations
@@ -58,3 +62,30 @@ def test_engine_knobs_match_readme_table():
         if where.startswith("recommend_spark/"):
             documented |= names
     assert _engine_knobs() == documented
+
+
+def _is_hint_call(node) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    if isinstance(f, ast.Name):
+        return f.id == "broadcast"
+    return (
+        isinstance(f, ast.Attribute)
+        and f.attr == "broadcast"
+        and isinstance(f.value, ast.Name)
+        and f.value.id == "F"
+    )
+
+
+def test_conditional_broadcast_hints_go_through_hint_if():
+    found = []
+    for path in (ROOT / "recommend_spark").rglob("*.py"):
+        if path.name == "io.py" and path.parent.name == "recommend_spark":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.IfExp) and (
+                _is_hint_call(node.body) or _is_hint_call(node.orelse)
+            ):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not found, f"size-gate these hints with io.hint_if: {found}"

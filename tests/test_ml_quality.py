@@ -67,7 +67,7 @@ def test_ivf_recall_vs_exact(spark):
     # router must detect the flat coarse-assignment margin and widen
     # from nprobe=3 to _IVF_FLAT_FRAC of the 10 cells, lifting recall
     # off the ~nprobe/ncells=0.3 floor (r11 verdict item 5; measured
-    # 0.78 at sf0.1 — tools/ann_recall_r12.json)
+    # 0.78 at sf0.1 — tools/ann_recall_r12.json at commit 9b03a2d)
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"IVF recall@5 {recall:.3f} below the flat-regime gate"
 

@@ -1118,6 +1118,7 @@ def test_gemm_kernel_bucketed_fallback_matches_broadcast(spark, monkeypatch):
     broadcast kernel — the shared-scorer guarantee."""
     import random
 
+    from recommend_spark import blockkernel
     from recommend_spark.queries.dedup import _containment_pairs
     from recommend_spark.queries.joins import _set_similarity_pairs
 
@@ -1143,7 +1144,7 @@ def test_gemm_kernel_bucketed_fallback_matches_broadcast(spark, monkeypatch):
     base_ssj = rows(_set_similarity_pairs(sdocs))
     assert base_contain and base_ssj
 
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", "2048")
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 2048)
     bucketed_contain = _containment_pairs(cdocs)
     plan = bucketed_contain._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan, plan[:2000]
@@ -1157,13 +1158,15 @@ def test_gemm_kernel_bucketed_fallback_matches_broadcast(spark, monkeypatch):
 
 def test_minhash_banded_rescore_broadcast_gate(spark, monkeypatch):
     """The banded-LSH rescore's signature-table broadcast is SIZE-GATED
-    (r11 verdict item 1): with the staging budget forced tiny the two
-    rescore hints must disappear from the optimized plan (the joins run
-    plain under AQE instead of pinning the full per-doc signature table
-    into every executor), and the pairs must be bit-identical — the gate
-    changes the physical strategy only, never the math."""
+    (r11 verdict item 1): with the hint budget (``io.BROADCAST_HINT_BUDGET``)
+    forced to 0 the two rescore hints must disappear from the optimized
+    plan (the joins run plain under AQE instead of pinning the full
+    per-doc signature table into every executor), and the pairs must be
+    bit-identical — the gate changes the physical strategy only, never
+    the math."""
     import random
 
+    from recommend_spark import io
     from recommend_spark.queries.dedup import _minhash_banded_pairs_from
 
     rng = random.Random(7)
@@ -1190,7 +1193,7 @@ def test_minhash_banded_rescore_broadcast_gate(spark, monkeypatch):
     base_rows = sorted(tuple(r) for r in base.collect())
     assert base_rows, "planted dup pairs must be found"
 
-    monkeypatch.setenv("SPARK_GRAFT_BLOCK_KERNEL_MAX_BYTES", "64")
+    monkeypatch.setattr(io, "BROADCAST_HINT_BUDGET", 0)
     gated = _minhash_banded_pairs_from(df)
     # exactly the TWO rescore hints (sig side a, sig side b) are gated
     # off; the pipeline's other broadcasts (token hash, minhash params,

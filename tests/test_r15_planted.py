@@ -195,7 +195,7 @@ def test_cc_components_deep_chain_round_count(spark, monkeypatch):
     monkeypatch.setattr(dd, "_cc_round", counting_round)
     pairs = [(i, i + 1) for i in range(1, 256)]
     pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    rep, _ = _cc_components(pdf)
+    rep = _cc_components(pdf)
     labels = {r["orig"]: r["cur"] for r in rep.collect()}
     assert labels == {v: 1 for v in range(1, 257)}
     assert calls["rounds"] <= 20, calls["rounds"]
@@ -207,9 +207,9 @@ def test_cc_components_deep_path_matches_endgame_path(spark, monkeypatch):
         PLANTED["chain"] + PLANTED["star"] + PLANTED["clique"] + [(500, 501)]
     )
     pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    rep_endgame, _ = _cc_components(pdf)  # default threshold: local endgame
+    rep_endgame = _cc_components(pdf)  # default threshold: local endgame
     monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
-    rep_deep, _ = _cc_components(pdf)  # deep path: stars + contraction only
+    rep_deep = _cc_components(pdf)  # deep path: stars + contraction only
     a = sorted(map(tuple, rep_endgame.collect()))
     b = sorted(map(tuple, rep_deep.collect()))
     assert a == b
@@ -237,7 +237,7 @@ def test_cc_checkpoint_falls_back_on_private_api_drift(
     forest = [(a + 1000, b + 1000) for a, b in PLANTED["forest"]]
     pairs = PLANTED["chain"] + PLANTED["star"] + PLANTED["clique"] + forest
     pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    ref = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+    ref = sorted(map(tuple, _cc_components(pdf).collect()))
 
     def broken(*_):
         raise drift
@@ -245,9 +245,9 @@ def test_cc_checkpoint_falls_back_on_private_api_drift(
     monkeypatch.setattr(io, seam, broken)
     monkeypatch.setattr(io, "_PRIVATE_API_WARNED", False)
     with caplog.at_level(logging.WARNING, logger=io.__name__):
-        endgame = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+        endgame = sorted(map(tuple, _cc_components(pdf).collect()))
         monkeypatch.setattr(io, "LOCAL_ENDGAME_EDGES", 0)
-        deep = sorted(map(tuple, _cc_components(pdf)[0].collect()))
+        deep = sorted(map(tuple, _cc_components(pdf).collect()))
     assert endgame == ref
     assert deep == ref
     assert dict(ref) == _true_components(pairs)
