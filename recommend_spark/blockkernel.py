@@ -1,36 +1,39 @@
-"""Sizing policy for driver-staged broadcast block kernels.
+"""The block kernels and their one staging decision.
 
-``sim_knn_join`` and ``dedup_embed_cosine`` ship the candidate embedding
-matrix to executors via ``sparkContext.broadcast`` — one torrent transfer,
-shared read-only by every task.  That matrix is materialized ON THE DRIVER
-first (``pq.read_table``), so it is bounded by driver RAM:
+Three exact kernels score a streamed side against a whole index side, one
+dense block per Arrow batch:
 
-    bytes = N_candidates × dim × 8   (float64)
+- ``sim_knn_join``: float64 cosine blocks, per-query top-k;
+- ``dedup_embed_cosine``: the same blocks, every pair at or over tau;
+- ``bitset_gemm_pairs`` (``dedup_containment``, ``join_set_similarity``):
+  float32 0/1 incidence GEMM blocks, pairs at or over a set metric.
 
-At the fixtures' 64-dim embeddings the 2 GiB budget corresponds to
-N ≈ 4.2M candidate vectors; a 100 TB corpus is far past it.  Callers check
-``block_kernel_fits`` (a parquet FOOTER read — row count only, no data) and
-route oversized candidate sides to their bucketed cogroup fallback, which
-shuffles bucket-sized blocks instead of staging anything driver-side.  See
-SCALE.md §"Block kernels".
+``block_join`` runs all three.  The one decision is ``n_buckets``: when the
+index side's driver footprint fits ``MAX_STAGED_BYTES``, the index value is
+staged on the driver, torrent-broadcast once (``memo_broadcast``) and the
+stream side runs map-only through ``mapInPandas``.  Past the budget nothing
+is staged: both sides hash into B buckets and every (bi, bj) cell of the
+B×B grid cogroups ~1/B of each side, builds the index value executor-side
+and runs the SAME scorer.  The embedding footprint is a parquet FOOTER
+read (row count only, no data); see SCALE.md §10d-bis.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import os
 
 import pyarrow.parquet as pq
 
-#: Driver-RAM budget for a staged candidate matrix.  Read at call time as
-#: ``blockkernel.MAX_STAGED_BYTES``, so tests force the bucketed paths by
-#: patching this attribute.
+from .io import spread_width
+
+#: Driver-RAM budget for a staged index value.  Read at call time by
+#: ``n_buckets``, so tests force the grid path by patching this attribute.
 MAX_STAGED_BYTES = 2 << 30
 
-#: Upper bound on fallback bucket count: replication cost of the bucketed
-#: paths grows linearly with it, and past ~64 the per-bucket block is small
-#: enough that scheduler overhead dominates the kernel.
+#: Upper bound on the grid side B: the grid shuffles B copies of each
+#: side, and past ~64 the per-cell block is small enough that scheduler
+#: overhead dominates the kernel.
 MAX_BUCKETS = 64
 
 
@@ -43,16 +46,107 @@ def candidate_matrix_bytes(parquet_path: str, dim: int) -> int:
     return n * dim * 8
 
 
-def block_kernel_fits(parquet_path: str, dim: int) -> bool:
-    """True if the candidate side may be staged on the driver + broadcast."""
-    return candidate_matrix_bytes(parquet_path, dim) <= MAX_STAGED_BYTES
+def n_buckets(need_bytes: int) -> int:
+    """Grid side B for an index side needing ``need_bytes`` of driver RAM:
+    1 (stage and broadcast) within ``MAX_STAGED_BYTES``, otherwise
+    ⌈need / budget⌉ capped at ``MAX_BUCKETS``, so each cell's ~1/B of the
+    index side is within the budget."""
+    if need_bytes <= MAX_STAGED_BYTES:
+        return 1
+    return min(MAX_BUCKETS, -(-need_bytes // MAX_STAGED_BYTES))
 
 
-def fallback_buckets(parquet_path: str, dim: int) -> int:
-    """Bucket count for the cogroup fallback: each bucket's candidate block
-    stays within the staging budget, capped at MAX_BUCKETS."""
-    b = math.ceil(candidate_matrix_bytes(parquet_path, dim) / MAX_STAGED_BYTES)
-    return max(1, min(MAX_BUCKETS, b))
+def block_join(
+    stream_df,
+    index_df,
+    *,
+    key,
+    need_bytes,
+    stage,
+    from_rows,
+    score,
+    schema,
+    spread=False,
+    finish=None,
+):
+    """Score every ``stream_df`` row against the whole of ``index_df`` on
+    the path ``n_buckets(need_bytes)`` picks.
+
+    Args:
+      stream_df, index_df: DataFrames with the same columns; ``key`` is a
+        long column of both that the grid path hashes into buckets.
+      need_bytes: the index side's driver footprint if staged.
+      stage: ``() -> (memo_key, make_value)``, called on the staged path
+        only; ``make_value()`` builds the index value on the driver and
+        ``memo_broadcast`` ships it under ``memo_key``.
+      from_rows: ``pdf -> value``, the same value built on an executor
+        from a pandas frame of index rows (grid path).
+      score: ``(stream_pdf, value) -> iterator of pandas frames`` matching
+        ``schema``; THE one scoring definition of both paths.
+      schema: output DDL schema.
+      spread: repartition the stream side to ``spread_width`` before the
+        map (staged path; a single-file scan is one task otherwise).  The
+        grid's cogroup exchange spreads it already.
+      finish: ``DataFrame -> DataFrame`` applied to the grid path's output
+        only: a cell sees 1/B of the index side, so a per-stream-row
+        selection (kNN's top-k) needs one global merge after the cells.
+
+    A (stream, index) row pair meets in exactly one cell, (s%B, i%B), and
+    a cell's scorer runs on the same arithmetic as the broadcast kernel,
+    so both paths return identical rows (after ``finish``)."""
+    nb = n_buckets(need_bytes)
+    spark = stream_df.sparkSession
+    if nb == 1:
+        memo_key, make_value = stage()
+        bc = memo_broadcast(spark.sparkContext, memo_key, make_value)
+
+        def kernel(batches):
+            value = bc.value
+            for pdf in batches:
+                if len(pdf):
+                    yield from score(pdf, value)
+
+        if spread:
+            stream_df = stream_df.repartition(spread_width(spark))
+        return stream_df.mapInPandas(kernel, schema)
+
+    import pyspark.sql.functions as F
+
+    # Self-joins derive both sides from the SAME DataFrame: rename the
+    # index side's columns and give each side its OWN explode expression,
+    # otherwise the duplicated attribute ids trip the analyzer's
+    # self-cogroup deduplication and the index columns arrive pruned in
+    # the udf (observed: the right frame carrying only the grouping keys).
+    cols = index_df.columns
+    renamed = {f"_ix_{c}": c for c in cols}
+
+    def grid():
+        return F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
+
+    left = stream_df.withColumn(
+        "bi", F.pmod(key, F.lit(nb)).cast("int")
+    ).withColumn("bj", grid())
+    right = (
+        index_df.select(*[F.col(c).alias(r) for r, c in renamed.items()])
+        .withColumn("bj", F.pmod(f"_ix_{key}", F.lit(nb)).cast("int"))
+        .withColumn("bi", grid())
+    )
+
+    def cell(lpdf, rpdf):
+        import pandas as pd
+
+        # an empty frame with no columns is the cogroup udf's empty result
+        if lpdf.empty or rpdf.empty:
+            return pd.DataFrame()
+        outs = list(score(lpdf, from_rows(rpdf.rename(columns=renamed))))
+        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
+
+    out = (
+        left.groupBy("bi", "bj")
+        .cogroup(right.groupBy("bi", "bj"))
+        .applyInPandas(cell, schema)
+    )
+    return finish(out) if finish else out
 
 
 #: Rough per-object driver costs of collect()ing (id, nt, toks) rows —
@@ -121,9 +215,10 @@ def memo_broadcast(sc, key, make_value):
     return bc
 
 
-def staged_embeddings_broadcast(sc, path: str):
-    """Memoized torrent broadcast of the staged embedding block:
-    (vec_id int64 array, N×dim float64 matrix) read from ``path``.
+def staged_embeddings(path: str):
+    """``block_join``'s ``stage`` for the embedding kernels: a memo key and
+    a maker of the (vec_id int64 array, N×dim float64 matrix) block read
+    from ``path``.
 
     Keyed by FILE identity (path, mtime, size) — zero hashing of the
     gated-size matrix.  ``dedup_embed_cosine`` and ``sim_knn_join``
@@ -131,7 +226,6 @@ def staged_embeddings_broadcast(sc, path: str):
     executor-resident copy, and bench reps stop accumulating a fresh
     corpus-matrix blob per invocation (r11 ADVICE, extended r12)."""
     st = os.stat(path)
-    key = ("embstage", path, st.st_mtime_ns, st.st_size)
 
     def make():
         import numpy as np
@@ -142,7 +236,18 @@ def staged_embeddings_broadcast(sc, path: str):
             np.asarray(t["embedding"].to_pylist(), dtype=np.float64),
         )
 
-    return memo_broadcast(sc, key, make)
+    return ("embstage", path, st.st_mtime_ns, st.st_size), make
+
+
+def embeddings_from_rows(pdf):
+    """``block_join``'s ``from_rows`` for the embedding kernels: the
+    ``staged_embeddings`` value built from a pandas frame of rows."""
+    import numpy as np
+
+    return (
+        pdf["vec_id"].to_numpy(),
+        np.asarray(pdf["embedding"].to_list(), dtype=np.float64),
+    )
 
 
 #: Per-task working-set bound for one dense score block (stream-tile rows ×
@@ -182,13 +287,13 @@ def index_ordered_dot_block(a_mat, b_mat):
     """Dense dot-product block via an index-ordered left fold over the
     dimensions: acc[i,j] = (((0 + a[i,0]·b[j,0]) + a[i,1]·b[j,1]) + …) —
     bit-identical to the scalar fold that Spark's ``F.aggregate`` and
-    DuckDB's ``list_reduce`` evaluate, which is what lets the broadcast
-    kernels, their bucketed cogroup twins, and the SQL oracles all
+    DuckDB's ``list_reduce`` evaluate, which is what lets both
+    ``block_join`` paths of the embedding kernels and the SQL oracles all
     hash-match.  THE single definition: a BLAS matmul would be faster and
     WRONG here (blocked/FMA accumulation order varies with shape), and a
-    second copy of this loop risks the two paths silently diverging.
-    Shared by sim_knn_join, dedup_embed_cosine and both their fallbacks,
-    each of which bounds a_mat via ``iter_stream_tiles``.
+    second copy of this loop risks the kernels silently diverging.
+    Shared by the sim_knn_join and dedup_embed_cosine scorers, each of
+    which bounds a_mat via ``iter_stream_tiles``.
 
     The per-k outer product writes into ONE reused buffer (``out=tmp``)
     instead of allocating a fresh rows×N temporary 64 times — same IEEE
@@ -213,10 +318,9 @@ def topk_by_value_then_id(acc_m, b_ids, k):
     the k-th value (where membership itself depends on the id tie-break
     — real in replica-perturbed corpora, where duplicate embeddings give
     exactly equal cosines) fall back to the full-axis lexsort.  THE
-    single selection definition shared by sim_knn_join's broadcast
-    kernel and its bucketed cogroup twin — same convention as
-    ``index_ordered_dot_block``: one implementation, or the two paths
-    silently diverge."""
+    single selection definition, used by sim_knn_join's scorer on both
+    ``block_join`` paths — same convention as ``index_ordered_dot_block``:
+    one implementation, or the paths silently diverge."""
     import numpy as np
 
     n = acc_m.shape[1]
@@ -243,16 +347,19 @@ def topk_by_value_then_id(acc_m, b_ids, k):
 
 def bitset_gemm_pairs(
     stream_df,
-    index_rows,
+    index_df,
     vocab_map,
     *,
+    n_index,
+    n_index_toks,
     metric,
     tau,
     exclude_self=False,
+    spread=False,
 ):
     """All qualifying (stream, index) set-intersection pairs via a dense
     0/1 GEMM block kernel — the degenerate-vocabulary twin of the
-    embedding block kernels above.
+    embedding block kernels.
 
     When a corpus's whole vocabulary fits a small universe (templated or
     boilerplate-heavy corpora; the regime that DEFEATS rare-token prefix
@@ -260,16 +367,23 @@ def bitset_gemm_pairs(
     corpus, so the candidate join degenerates toward the quadratic pair
     space it exists to avoid), each document's distinct-token set is a
     |V|-bit incidence vector and the exact intersection size of every
-    pair is one matrix product: ``n_common = A_bits @ B_bits.T``.  The
-    index side ships as an N×V float32 incidence matrix via torrent
-    broadcast (callers gate on ``MAX_STAGED_BYTES``; float32 at the
-    source so each python worker holds exactly ONE gated-size copy —
-    the in-kernel transpose is a numpy view, and a uint8 transport
-    would re-materialize a per-partition float32 cast on top of it).
-    The stream side flows through ``mapInPandas`` in Arrow batches — a
-    map-only plan:
-    no candidate shuffle, no pair materialization beyond the qualifying
-    output.
+    pair is one matrix product: ``n_common = A_bits @ B_bits.T``.  Within
+    the staging budget the index side ships as an N×V float32 incidence
+    matrix via torrent broadcast (float32 at the source so each python
+    worker holds exactly ONE budget-sized copy — the in-kernel transpose
+    is a numpy view, and a uint8 transport would re-materialize a
+    per-partition float32 cast on top of it) and the stream side flows
+    through ``mapInPandas`` in Arrow batches — a map-only plan: no
+    candidate shuffle, no pair materialization beyond the qualifying
+    output.  Past it, ``block_join``'s grid builds each cell's matrix
+    executor-side and NOTHING is collected to the driver.
+
+    The driver footprint counts both the f32 incidence matrix
+    (``n_index`` × |V| × 4) and the Python-object cost of collecting the
+    (id, nt, toks) rows it is built from (``collected_toks_bytes``),
+    which exceeds the matrix by 10-100x at small vocabularies; sizing the
+    grid from the matrix alone could hand each cell a block far over
+    budget.
 
     Unlike ``index_ordered_dot_block`` (floats: accumulation order
     changes the bits, so BLAS is banned there), every partial sum here
@@ -279,65 +393,66 @@ def bitset_gemm_pairs(
     ints — bit-identical to Spark's and DuckDB's double division.
 
     Args:
-      stream_df: DataFrame (id long, nt long, toks array<string>) —
-        each streamed document's distinct tokens.
-      index_rows: list of (id, nt, toks-list) rows (already collected;
-        the caller gates the size against ``MAX_STAGED_BYTES``).
+      stream_df, index_df: DataFrames (id long, nt long, toks
+        array<string>) — each document's distinct tokens.
       vocab_map: dict token -> bit index over the WHOLE corpus
         vocabulary (caller gates len(vocab_map) ≤ 1024).
+      n_index, n_index_toks: index-side row and token counts.
       metric: 'containment' (n_common / nt_stream) or
         'jaccard' (n_common / (nt_stream + nt_index − n_common)).
       tau: qualifying threshold, metric ≥ tau.
       exclude_self: drop stream id == index id pairs (self-join mode).
+      spread: ``block_join``'s staged-path stream spread.
 
     Returns a DataFrame (sid long, iid long, n_common long, metric
     double); callers rename/reorder/cast to their output contract.
     """
+    import functools
+
     import numpy as np
 
-    idx_ids = np.asarray([r[0] for r in index_rows], dtype=np.int64)
-    idx_nt = np.asarray([r[1] for r in index_rows], dtype=np.float64)
-    idx_mat = _toks_matrix([r[2] for r in index_rows], vocab_map)
-    # torrent broadcast, fetched once per python worker and shared by its
-    # tasks — NOT a closure capture, which would re-pickle the matrix into
-    # every task (the embed-cosine kernel's established transport).
-    # Content-memoized: bench reps rebuild the same index; hashing the
-    # staged arrays (gated ≤ budget) is far cheaper than re-broadcasting.
-    key = (
-        "bitset",
-        idx_mat.shape,
-        content_digest(idx_ids.tobytes()),
-        content_digest(idx_nt.tobytes()),
-        content_digest(idx_mat.tobytes()),
-        content_digest(repr(sorted(vocab_map.items())).encode()),
-    )
-    bc = memo_broadcast(
-        stream_df.sparkSession.sparkContext,
-        key,
-        lambda: (idx_ids, idx_nt, idx_mat),
-    )
+    def from_rows(pdf):
+        return (
+            pdf["id"].to_numpy(np.int64),
+            pdf["nt"].to_numpy(np.float64),
+            _toks_matrix(pdf["toks"], vocab_map),
+        )
 
-    def kernel(batches):
-        b_ids, b_nt, b_mat = bc.value
-        bt = b_mat.T  # float32 already; transpose is a view, not a copy
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = _toks_matrix(pdf["toks"], vocab_map)
-            yield from _score_bitset_blocks(
-                a,
-                pdf["id"].to_numpy(np.int64),
-                pdf["nt"].to_numpy(np.float64),
-                bt,
-                b_ids,
-                b_nt,
-                metric=metric,
-                tau=tau,
-                exclude_self=exclude_self,
-            )
+    def stage():
+        # the collect IS the broadcast operand's materialization.
+        # Content-memoized: bench reps rebuild the same index; hashing the
+        # staged arrays (within budget) is far cheaper than re-broadcasting.
+        value = from_rows(index_df.toPandas())
+        ids, nt, mat = value
+        key = (
+            "bitset",
+            mat.shape,
+            content_digest(ids.tobytes()),
+            content_digest(nt.tobytes()),
+            content_digest(mat.tobytes()),
+            content_digest(repr(sorted(vocab_map.items())).encode()),
+        )
+        return key, lambda: value
 
-    return stream_df.mapInPandas(
-        kernel, "sid long, iid long, n_common long, metric double"
+    return block_join(
+        stream_df,
+        index_df,
+        key="id",
+        need_bytes=max(
+            n_index * len(vocab_map) * 4,
+            collected_toks_bytes(n_index, n_index_toks),
+        ),
+        stage=stage,
+        from_rows=from_rows,
+        score=functools.partial(
+            _score_bitset_blocks,
+            vocab_map=vocab_map,
+            metric=metric,
+            tau=tau,
+            exclude_self=exclude_self,
+        ),
+        schema="sid long, iid long, n_common long, metric double",
+        spread=spread,
     )
 
 
@@ -353,16 +468,18 @@ def _toks_matrix(tok_lists, vocab_map):
     return m
 
 
-def _score_bitset_blocks(
-    a, s_ids, s_nt, bt, b_ids, b_nt, *, metric, tau, exclude_self
-):
-    """THE single scoring definition shared by the broadcast kernel and
-    the bucketed cogroup twin (the index_ordered_dot_block convention:
-    one implementation, or the two paths silently diverge).  Yields
-    pandas frames of qualifying (sid, iid, n_common, metric) pairs."""
+def _score_bitset_blocks(pdf, value, *, vocab_map, metric, tau, exclude_self):
+    """The bitset kernel's ``block_join`` scorer: a stream batch against
+    an (ids, nt, float32 incidence matrix) index value.  Yields pandas
+    frames of qualifying (sid, iid, n_common, metric) pairs."""
     import numpy as np
     import pandas as pd
 
+    b_ids, b_nt, b_mat = value
+    bt = b_mat.T  # float32 already; transpose is a view, not a copy
+    a = _toks_matrix(pdf["toks"], vocab_map)
+    s_ids = pdf["id"].to_numpy(np.int64)
+    s_nt = pdf["nt"].to_numpy(np.float64)
     # Sub-block the stream side so each (block × N_index) float32 score
     # matrix stays cache-sized (≤64 MB) regardless of input batch size.
     block = max(1, min(512, (64 << 20) // max(1, 4 * bt.shape[1])))
@@ -403,156 +520,3 @@ def _score_bitset_blocks(
                 "metric": val[ok],
             }
         )
-
-
-def bitset_gemm_pairs_within_budget(
-    stream_df,
-    index_df,
-    vocab_map,
-    *,
-    n_index,
-    n_index_toks,
-    metric,
-    tau,
-    exclude_self=False,
-):
-    """The bitset GEMM kernel on whichever path the staging budget allows:
-    ``bitset_gemm_pairs`` when the index side fits on the driver,
-    ``bitset_gemm_pairs_bucketed`` otherwise.
-
-    Both driver-side footprints are gated: the f32 incidence matrix
-    (``n_index`` × |V| × 4) AND the Python-object cost of collecting the
-    (id, nt, toks) rows it is built from (``collected_toks_bytes`` of
-    ``n_index`` rows holding ``n_index_toks`` tokens), which exceeds the
-    matrix by 10-100x at small vocabularies.  B derives from the LARGER
-    footprint: the fallback fires precisely when the token-list bytes blow
-    the budget, so sizing from the matrix alone could pick B=2 and hand
-    each cogroup cell a block far over budget.
-
-    ``index_df`` has the stream side's columns (id long, nt long, toks
-    array<string>); the output contract is ``bitset_gemm_pairs``'."""
-    budget = MAX_STAGED_BYTES
-    need = max(
-        n_index * len(vocab_map) * 4, collected_toks_bytes(n_index, n_index_toks)
-    )
-    if need <= budget:
-        index_rows = [(r["id"], r["nt"], r["toks"]) for r in index_df.collect()]
-        return bitset_gemm_pairs(
-            stream_df,
-            index_rows,
-            vocab_map,
-            metric=metric,
-            tau=tau,
-            exclude_self=exclude_self,
-        )
-    return bitset_gemm_pairs_bucketed(
-        stream_df,
-        index_df,
-        vocab_map,
-        metric=metric,
-        tau=tau,
-        exclude_self=exclude_self,
-        n_buckets=max(2, min(MAX_BUCKETS, -(-need // budget))),
-    )
-
-
-def bitset_gemm_pairs_bucketed(
-    stream_df,
-    index_df,
-    vocab_map,
-    *,
-    metric,
-    tau,
-    exclude_self=False,
-    n_buckets,
-):
-    """The bitset GEMM kernel WITHOUT driver staging — for index sides
-    past ``MAX_STAGED_BYTES`` (the _embed_pairs_bucketed shape): both
-    sides hash into B buckets, every (i, j) grid cell cogroups stream
-    bucket i with index bucket j, and the cell runs the SAME
-    ``_score_bitset_blocks`` scorer on matrices built executor-side from
-    the cogrouped rows.  A (stream, index) pair lands in exactly one
-    cell — (s%B, i%B) — so the output is identical to the broadcast
-    path with no dedup pass.  Cost: BOTH sides shuffle B× — the stream
-    side explodes over all B ``bj`` values and the index side over all
-    B ``bi`` values, so the cogroup shuffle moves B·|stream| + B·|index|
-    rows (the B²-grid has no one-sided replication; measured shuffle
-    amplification is recorded beside the perturbed-sf1 12.2 s entry in
-    SCALE.md §10s).  Each cell's index matrix is ~1/B of the whole, so
-    B = ceil(index_bytes / budget) keeps every cell within the staging
-    budget (callers cap at MAX_BUCKETS).
-
-    Inputs are DataFrames (id long, nt long, toks array<string>);
-    NOTHING is collected to the driver.  Output contract matches
-    bitset_gemm_pairs."""
-    import pandas as pd
-    import pyspark.sql.functions as F
-
-    # The two sides are usually derived from the SAME DataFrame (self
-    # dedup) — rename the index side's data columns and give each side
-    # its OWN explode expression, otherwise the duplicated attribute ids
-    # trip the analyzer's self-cogroup deduplication and the right-side
-    # data columns arrive pruned in the udf (observed: rpdf carrying
-    # only the grouping keys).
-    left = stream_df.withColumn(
-        "bi", F.pmod("id", F.lit(n_buckets)).cast("int")
-    ).withColumn("bj", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
-    right = (
-        index_df.select(
-            F.col("id").alias("rid"),
-            F.col("nt").alias("rnt"),
-            F.col("toks").alias("rtoks"),
-        )
-        .withColumn("bj", F.pmod("rid", F.lit(n_buckets)).cast("int"))
-        .withColumn(
-            "bi", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
-        )
-    )
-
-    def cell(lpdf, rpdf):
-        import numpy as np
-
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame(
-                {"sid": [], "iid": [], "n_common": [], "metric": []}
-            ).astype(
-                {
-                    "sid": "int64",
-                    "iid": "int64",
-                    "n_common": "int64",
-                    "metric": "float64",
-                }
-            )
-        a = _toks_matrix(lpdf["toks"], vocab_map)
-        bt = _toks_matrix(rpdf["rtoks"], vocab_map).T
-        outs = list(
-            _score_bitset_blocks(
-                a,
-                lpdf["id"].to_numpy(np.int64),
-                lpdf["nt"].to_numpy(np.float64),
-                bt,
-                rpdf["rid"].to_numpy(np.int64),
-                rpdf["rnt"].to_numpy(np.float64),
-                metric=metric,
-                tau=tau,
-                exclude_self=exclude_self,
-            )
-        )
-        if not outs:
-            return pd.DataFrame(
-                {"sid": [], "iid": [], "n_common": [], "metric": []}
-            ).astype(
-                {
-                    "sid": "int64",
-                    "iid": "int64",
-                    "n_common": "int64",
-                    "metric": "float64",
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return (
-        left.groupBy("bi", "bj")
-        .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(cell, "sid long, iid long, n_common long, metric double")
-    )

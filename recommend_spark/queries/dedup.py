@@ -19,7 +19,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from .. import blockkernel
-from ..blockkernel import index_ordered_dot_block, iter_stream_tiles
+from ..blockkernel import (
+    bitset_gemm_pairs,
+    block_join,
+    candidate_matrix_bytes,
+    embeddings_from_rows,
+    index_ordered_dot_block,
+    iter_stream_tiles,
+    staged_embeddings,
+)
 from ..io import (
     checkpoint,
     hint_if,
@@ -384,10 +392,11 @@ def dedup_containment(spark, sf_dir):
     WHOLE vocabulary fits the mask universe (≤1024 tokens — templated
     corpora, where every posting list is corpus-sized and prefix
     filtering cannot prune) the op routes to the bitset GEMM block
-    kernel instead: the corpus ships as an N×|V| uint8 incidence
+    kernel instead: the corpus ships as an N×|V| float32 incidence
     matrix, the A side streams through mapInPandas, and each pair's
     exact intersection is one integer-exact float32 GEMM cell
-    (blockkernel.bitset_gemm_pairs; gated on MAX_STAGED_BYTES).
+    (blockkernel.bitset_gemm_pairs; past the driver staging budget it
+    runs on blockkernel.block_join's bucket grid instead).
     n_common and na are exact ints; the single division then one
     compare is bit-deterministic in both engines.
 
@@ -504,7 +513,7 @@ def _containment_pairs(
     item 5).  The staged kernel path still collects the gated-size
     corpus driver-side at build — that collect IS the broadcast
     operand's materialization (a BroadcastExchange by hand), bounded
-    by MAX_STAGED_BYTES, not a gate artifact."""
+    by the block-kernel staging budget, not a gate artifact."""
     if toks_expr is None:
         toks_expr = _TOKS()
     parts = _token_sigs(docs, toks_expr, stats_key=stats_key)
@@ -551,11 +560,9 @@ def _containment_pairs(
         # degenerates toward the quadratic candidate space (measured at
         # the perturbed sf1 campaign corpus: 147 s for ~55M true pairs —
         # >100× candidate waste).  Route to the bitset GEMM block kernel:
-        # the corpus ships as an N×|V| uint8 incidence matrix, the A side
-        # streams map-only, and every pair's exact intersection is one
-        # float32 GEMM cell (integer-exact; see bitset_gemm_pairs).
-        from ..blockkernel import bitset_gemm_pairs_within_budget
-
+        # the corpus ships as an N×|V| float32 incidence matrix, the A
+        # side streams map-only, and every pair's exact intersection is
+        # one float32 GEMM cell (integer-exact; see bitset_gemm_pairs).
         if parts["stats"]["n_docs"] is not None:
             n_docs, n_toks = parts["stats"]["n_docs"], parts["stats"]["n_toks"]
         else:
@@ -580,8 +587,8 @@ def _containment_pairs(
         )
         # a corpus too big to stage driver-side, with a vocabulary still
         # degenerate (the prefix path would candidate-explode), takes the
-        # bucketed cogroup twin: grid cells shuffle instead of staging
-        pairs = bitset_gemm_pairs_within_budget(
+        # bucket grid: cells shuffle instead of staging
+        pairs = bitset_gemm_pairs(
             stream,
             d.select(F.col("doc_id").alias("id"), "nt", "toks"),
             vocab_map,
@@ -976,128 +983,57 @@ def dedup_embed_cosine(spark, sf_dir):
     fold this replaces.
 
     The staged matrix is a DRIVER-RAM bound (N×64×8 bytes — see
-    recommend_spark/blockkernel.py and SCALE.md §"Block kernels"); a
-    candidate side past the budget routes to ``_embed_pairs_bucketed``,
-    the same kernel cogrouped over a B×B bucket grid with nothing staged
-    driver-side — hash-identical output."""
+    recommend_spark/blockkernel.py and SCALE.md §10d-bis); past it
+    ``blockkernel.block_join`` runs the same scorer on each cell of a B×B
+    bucket grid with nothing staged driver-side.  A pair (x < y) meets in
+    exactly one cell, (x%B, y%B), so the output is hash-identical."""
     import numpy as np
 
-    from ..blockkernel import block_kernel_fits, staged_embeddings_broadcast
-
+    tau = 0.4
     path = f"{sf_dir}/embeddings.parquet"
-    if not block_kernel_fits(path, dim=64):
-        return _embed_pairs_bucketed(spark, sf_dir, tau=0.4)
-    # file-identity-memoized: shares one executor-resident copy with
-    # sim_knn_join and across bench reps (r11 ADVICE, extended r12)
-    bc = staged_embeddings_broadcast(spark.sparkContext, path)
     tile_budget = blockkernel.STREAM_TILE_BYTES
 
-    def block_pairs(batches):
+    def pairs_score(pdf, value):
         import pandas as pd
 
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            a_ids = pdf["vec_id"].to_numpy()
-            a_mat = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
-            # stream-axis tiles bound the per-task score block (r13 decade
-            # triage — see blockkernel.DEFAULT_STREAM_TILE_BYTES); each
-            # pair's fold runs intact in one tile, so output is identical.
-            for t_ids, t_mat in iter_stream_tiles(
-                a_ids, a_mat, len(b_ids), tile_budget
-            ):
-                # left fold in index order, init 0.0 — bit-identical to the
-                # scalar fold ((0+p0)+p1)+... in both Spark and DuckDB.
-                acc = index_ordered_dot_block(t_mat, b_mat)
-                ia, ib = np.nonzero(
-                    (t_ids[:, None] < b_ids[None, :]) & (acc >= 0.4)
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_a": t_ids[ia],
-                        "vec_b": b_ids[ib],
-                        "cosine": acc[ia, ib],
-                    }
-                )
-
-    # single-file scan -> spread the streamed side across cores; the
-    # broadcast candidate matrix is unaffected.
-    from ..io import spread_width
-
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spread_width(spark))
-    )
-    return e.mapInPandas(
-        block_pairs, "vec_a long, vec_b long, cosine double"
-    )
-
-
-def _embed_pairs_bucketed(spark, sf_dir, tau):
-    """Exact cosine-pair generation without driver staging.
-
-    Both sides hash into B buckets; every (i, j) grid cell cogroups bucket
-    i of the left side with bucket j of the right side and runs the same
-    index-ordered fold kernel.  A pair (x < y) is produced exactly once —
-    in cell (x%B, y%B) — so no dedup pass is needed and the output is
-    hash-identical to the broadcast path.  Cost: each side shuffled B×
-    (linear in B); each cell's block stays within the staging budget."""
-    import numpy as np
-
-    from ..blockkernel import fallback_buckets
-
-    nb = fallback_buckets(f"{sf_dir}/embeddings.parquet", dim=64)
-    tile_budget = blockkernel.STREAM_TILE_BYTES
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    grid = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
-    left = e.withColumn("bi", F.pmod("vec_id", F.lit(nb)).cast("int")).withColumn(
-        "bj", grid
-    )
-    right = e.withColumn("bj", F.pmod("vec_id", F.lit(nb)).cast("int")).withColumn(
-        "bi", grid
-    )
-
-    def cell_pairs(lpdf, rpdf):
-        import pandas as pd
-
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-            {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-        )
-        if lpdf.empty or rpdf.empty:
-            return empty
-        a_ids = lpdf["vec_id"].to_numpy()
-        a_mat = np.asarray(lpdf["embedding"].to_list(), dtype=np.float64)
-        b_ids = rpdf["vec_id"].to_numpy()
-        b_mat = np.asarray(rpdf["embedding"].to_list(), dtype=np.float64)
-        # the candidate side of a cell is budget-gated; the stream side is
-        # a whole cogroup and needs the same tile bound as the broadcast
-        # path (blockkernel.DEFAULT_STREAM_TILE_BYTES).
-        frames = []
+        b_ids, b_mat = value
+        a_ids = pdf["vec_id"].to_numpy()
+        a_mat = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
+        # stream-axis tiles bound the per-task score block (r13 decade
+        # triage — see blockkernel.STREAM_TILE_BYTES); each pair's fold
+        # runs intact in one tile, so output is identical.
         for t_ids, t_mat in iter_stream_tiles(
             a_ids, a_mat, len(b_ids), tile_budget
         ):
+            # left fold in index order, init 0.0 — bit-identical to the
+            # scalar fold ((0+p0)+p1)+... in both Spark and DuckDB.
             acc = index_ordered_dot_block(t_mat, b_mat)
             ia, ib = np.nonzero(
                 (t_ids[:, None] < b_ids[None, :]) & (acc >= tau)
             )
-            if len(ia):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": t_ids[ia],
-                            "vec_b": b_ids[ib],
-                            "cosine": acc[ia, ib],
-                        }
-                    )
-                )
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True)
+            yield pd.DataFrame(
+                {
+                    "vec_a": t_ids[ia],
+                    "vec_b": b_ids[ib],
+                    "cosine": acc[ia, ib],
+                }
+            )
 
-    return (
-        left.groupBy("bi", "bj")
-        .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(cell_pairs, "vec_a long, vec_b long, cosine double")
+    # single-file scan -> the staged path spreads the streamed side across
+    # cores; the broadcast candidate matrix is unaffected.  The memo key
+    # is file identity: one executor-resident copy shared with
+    # sim_knn_join and across bench reps.
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return block_join(
+        e,
+        e,
+        key="vec_id",
+        need_bytes=candidate_matrix_bytes(path, dim=64),
+        stage=lambda: staged_embeddings(path),
+        from_rows=embeddings_from_rows,
+        score=pairs_score,
+        schema="vec_a long, vec_b long, cosine double",
+        spread=True,
     )
 
 

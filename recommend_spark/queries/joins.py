@@ -1092,7 +1092,7 @@ def _set_similarity_pairs(
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c")).persist()
     is_probe = F.col("doc_id") % 100 == 0
     if not force_prefix_path:
-        from ..blockkernel import bitset_gemm_pairs_within_budget
+        from ..blockkernel import bitset_gemm_pairs
 
         probes = docs.filter(is_probe).select(
             F.col("doc_id").alias("id"), F.size("toks").alias("nt"), "toks"
@@ -1129,18 +1129,15 @@ def _set_similarity_pairs(
             # probes derive from docs) — release the cached table instead
             # of leaking it across bench reps (r11 ADVICE)
             vocab.unpersist(blocking=False)
-            # single local parquet file = one input split; spread the
-            # corpus before the kernel so all cores stream it
-            stream = (
-                docs.filter(~is_probe)
-                .select(
-                    F.col("doc_id").alias("id"),
-                    F.size("toks").alias("nt"),
-                    "toks",
-                )
-                .repartition(spread_width(docs.sparkSession))
+            # single local parquet file = one input split; the staged
+            # path spreads the corpus before the kernel so all cores
+            # stream it
+            stream = docs.filter(~is_probe).select(
+                F.col("doc_id").alias("id"),
+                F.size("toks").alias("nt"),
+                "toks",
             )
-            pairs = bitset_gemm_pairs_within_budget(
+            pairs = bitset_gemm_pairs(
                 stream,
                 probes,
                 vocab_map,
@@ -1148,6 +1145,7 @@ def _set_similarity_pairs(
                 n_index_toks=n_ptoks,
                 metric="jaccard",
                 tau=_SSJ_TAU,
+                spread=True,
             )
             return pairs.select(
                 F.col("iid").alias("probe_id"),

@@ -20,8 +20,12 @@ from pyspark.sql import Window as W
 
 from .. import blockkernel
 from ..blockkernel import (
+    block_join,
+    candidate_matrix_bytes,
+    embeddings_from_rows,
     index_ordered_dot_block,
     iter_stream_tiles,
+    staged_embeddings,
     topk_by_value_then_id,
 )
 from ..io import load_table, sf_key, spread_width, stage
@@ -583,7 +587,8 @@ _SQL_DOT_AB = """
 def sim_knn_join(spark, sf_dir):
     """Full kNN self-join: exact top-5 neighbors for EVERY vector.
 
-    Block-kernel layout: the candidate matrix (N×64 float64) ships via
+    Block-kernel layout (``blockkernel.block_join``): within the staging
+    budget the candidate matrix (N×64 float64) ships via
     ``sparkContext.broadcast`` — one torrent transfer per executor, shared
     by all its tasks, NOT pickled into each task closure; each Arrow batch
     of query rows computes its cosine block as 64 index-ordered
@@ -593,139 +598,78 @@ def sim_knn_join(spark, sf_dir):
     come straight off the map.
 
     The staged matrix is a DRIVER-RAM bound (N×64×8 bytes — see
-    recommend_spark/blockkernel.py and SCALE.md §"Block kernels"), so a
-    candidate side past the budget routes to ``_knn_join_bucketed``: the
-    same kernel cogrouped per candidate bucket, per-bucket local top-K,
-    then a global top-K window — hash-identical output, nothing staged
-    driver-side.  At 100 TB the candidate side is usually the IVF/LSH
-    bucket instead (sim_ivf_topk / sim_ann_lsh); this operator is their
-    exact baseline and shares the kernel with dedup_embed_cosine."""
+    recommend_spark/blockkernel.py and SCALE.md §10d-bis); past it the
+    same scorer runs on each cell of a B×B bucket grid (~N/B queries ×
+    ~N/B candidates), keeping a cell-local top-K, and a global
+    (cosine DESC, neighbor_id) window merges the cells: the global top-K
+    is a subset of the union of the cell-local ones, so the output is
+    hash-identical with nothing staged driver-side.  At 100 TB the
+    candidate side is usually the IVF/LSH bucket instead (sim_ivf_topk /
+    sim_ann_lsh); this operator is their exact baseline and shares the
+    kernel with dedup_embed_cosine."""
     import numpy as np
-    import pyarrow.parquet as pq
-
-    from ..blockkernel import block_kernel_fits, staged_embeddings_broadcast
 
     K = 5
     path = f"{sf_dir}/embeddings.parquet"
-    if not block_kernel_fits(path, dim=64):
-        return _knn_join_bucketed(spark, sf_dir, K)
-    # file-identity-memoized: shares one executor-resident copy with
-    # dedup_embed_cosine and across bench reps (r11 ADVICE, extended r12)
-    bc = staged_embeddings_broadcast(spark.sparkContext, path)
     tile_budget = blockkernel.STREAM_TILE_BYTES
 
-    def knn_blocks(batches):
+    def knn_score(pdf, value):
         import pandas as pd
 
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            a_ids = pdf["vec_id"].to_numpy()
-            a_mat = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
-            # stream-axis tiles bound the per-task score block (r13 decade
-            # triage); each query row's FULL candidate axis stays inside
-            # its tile, so per-query top-K is exact and output identical.
-            for t_ids, t_mat in iter_stream_tiles(
-                a_ids, a_mat, len(b_ids), tile_budget
-            ):
-                acc = index_ordered_dot_block(t_mat, b_mat)
-                # exclude self, then exact top-K by (cosine DESC,
-                # neighbor_id ASC) via the shared selection kernel
-                self_mask = t_ids[:, None] == b_ids[None, :]
-                acc_m = np.where(self_mask, -np.inf, acc)
-                order = topk_by_value_then_id(acc_m, b_ids, K)
-                rows_q = np.repeat(t_ids, K)
-                rows_n = b_ids[order].ravel()
-                rows_c = np.take_along_axis(acc_m, order, axis=1).ravel()
-                yield pd.DataFrame(
-                    {
-                        "query_id": rows_q,
-                        "neighbor_id": rows_n,
-                        "cosine": rows_c,
-                    }
-                )
-
-    # embeddings.parquet is a single file -> 1 input partition; spread the
-    # query side so the per-batch block kernel runs on all cores instead of
-    # as one task (the candidate side is the broadcast, unaffected).
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spread_width(spark))
-    )
-    return e.mapInPandas(
-        knn_blocks, "query_id long, neighbor_id long, cosine double"
-    )
-
-
-def _knn_join_bucketed(spark, sf_dir, k):
-    """Exact kNN without driver staging: block-nested-loop over candidate
-    buckets.
-
-    Candidates hash into B buckets (each bucket's matrix fits the staging
-    budget); queries replicate to every bucket; a cogrouped Pandas kernel
-    computes the same index-ordered fold and keeps a per-bucket local
-    top-k; a global (cosine DESC, neighbor_id) window finishes.  The global
-    top-k is a subset of the union of bucket-local top-ks, and the fold
-    arithmetic is identical, so output is hash-identical to the broadcast
-    path.  Cost: query side shuffled B× — linear in B, never quadratic."""
-    import numpy as np
-
-    from ..blockkernel import fallback_buckets
-
-    nb = fallback_buckets(f"{sf_dir}/embeddings.parquet", dim=64)
-    tile_budget = blockkernel.STREAM_TILE_BYTES
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cand = e.withColumn("bkt", F.pmod("vec_id", F.lit(nb)).cast("int"))
-    q = e.withColumn("bkt", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
-
-    def local_topk(qpdf, cpdf):
-        import pandas as pd
-
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        a_ids = qpdf["vec_id"].to_numpy()
-        a_mat = np.asarray(qpdf["embedding"].to_list(), dtype=np.float64)
-        b_ids = cpdf["vec_id"].to_numpy()
-        b_mat = np.asarray(cpdf["embedding"].to_list(), dtype=np.float64)
-        # the query side of a cogroup cell is the WHOLE replicated query
-        # set — bound its score block with the same stream-axis tiles as
-        # the broadcast path; the bucket (candidate) axis stays whole per
-        # tile, so the bucket-local top-k is unchanged.
-        kk = min(k, len(b_ids))
-        frames = []
+        b_ids, b_mat = value
+        a_ids = pdf["vec_id"].to_numpy()
+        a_mat = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
+        kk = min(K, len(b_ids))
+        # stream-axis tiles bound the per-task score block (r13 decade
+        # triage); each query row's whole candidate block stays inside
+        # its tile, so the per-query top-K is exact and output identical.
         for t_ids, t_mat in iter_stream_tiles(
             a_ids, a_mat, len(b_ids), tile_budget
         ):
             acc = index_ordered_dot_block(t_mat, b_mat)
+            # exclude self, then exact top-K by (cosine DESC,
+            # neighbor_id ASC) via the shared selection kernel
             self_mask = t_ids[:, None] == b_ids[None, :]
             acc_m = np.where(self_mask, -np.inf, acc)
             order = topk_by_value_then_id(acc_m, b_ids, kk)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(t_ids, kk),
-                        "neighbor_id": b_ids[order].ravel(),
-                        "cosine": np.take_along_axis(
-                            acc_m, order, axis=1
-                        ).ravel(),
-                    }
-                )
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(t_ids, kk),
+                    "neighbor_id": b_ids[order].ravel(),
+                    "cosine": np.take_along_axis(acc_m, order, axis=1).ravel(),
+                }
             )
-        return pd.concat(frames, ignore_index=True)
 
-    part = (
-        q.groupBy("bkt")
-        .cogroup(cand.groupBy("bkt"))
-        .applyInPandas(local_topk, "query_id long, neighbor_id long, cosine double")
-        .filter(F.col("cosine") != float("-inf"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        part.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    def global_topk(cells):
+        # a cell with fewer than K non-self candidates pads with the
+        # masked self (-inf); the window then keeps the global top-K
+        w = W.partitionBy("query_id").orderBy(
+            F.col("cosine").desc(), "neighbor_id"
+        )
+        return (
+            cells.filter(F.col("cosine") != float("-inf"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= K)
+            .drop("rn")
+        )
+
+    # embeddings.parquet is a single file -> 1 input partition; the staged
+    # path spreads the query side so the per-batch block kernel runs on all
+    # cores instead of as one task (the candidate side is the broadcast).
+    # The memo key is file identity: one executor-resident copy shared
+    # with dedup_embed_cosine and across bench reps.
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return block_join(
+        e,
+        e,
+        key="vec_id",
+        need_bytes=candidate_matrix_bytes(path, dim=64),
+        stage=lambda: staged_embeddings(path),
+        from_rows=embeddings_from_rows,
+        score=knn_score,
+        schema="query_id long, neighbor_id long, cosine double",
+        spread=True,
+        finish=global_topk,
     )
 
 

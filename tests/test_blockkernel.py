@@ -1,9 +1,12 @@
-"""Block-kernel staging policy: threshold math + fallback equivalence.
+"""Block-kernel staging policy: the sizing rule, the grid cell bound, and
+path equivalence.
 
-The broadcast block kernels (sim_knn_join, dedup_embed_cosine) stage the
-candidate matrix on the driver; past the budget they must route to their
-bucketed cogroup fallbacks and produce IDENTICAL rows (the fold arithmetic
-and tie-breaks are the same, so even the doubles match bit-for-bit).
+All three block kernels (sim_knn_join, dedup_embed_cosine and the bitset
+GEMM behind dedup_containment / join_set_similarity) run through
+``blockkernel.block_join``: within the budget the index side is staged on
+the driver and broadcast; past it ``n_buckets`` sizes a B×B cogroup grid.
+Both paths must produce IDENTICAL rows (the fold arithmetic and
+tie-breaks are the same, so even the doubles match bit-for-bit).
 """
 
 from __future__ import annotations
@@ -24,15 +27,55 @@ def test_candidate_matrix_bytes_is_footer_math():
 
 def test_threshold_flips_with_budget(monkeypatch):
     path = f"{SF_DIR}/embeddings.parquet"
+    need = blockkernel.candidate_matrix_bytes(path, dim=64)
     monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1 << 40)
-    assert blockkernel.block_kernel_fits(path, dim=64)
+    assert blockkernel.n_buckets(need) == 1
     monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1)
-    assert not blockkernel.block_kernel_fits(path, dim=64)
-    assert blockkernel.fallback_buckets(path, dim=64) == blockkernel.MAX_BUCKETS
+    assert blockkernel.n_buckets(need) == blockkernel.MAX_BUCKETS
     # a budget of half the matrix needs exactly 2 buckets
-    half = blockkernel.candidate_matrix_bytes(path, dim=64) // 2
-    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", half)
-    assert blockkernel.fallback_buckets(path, dim=64) == 2
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", need // 2)
+    assert blockkernel.n_buckets(need) == 2
+
+
+def test_grid_cells_hold_a_bucket_of_each_side(spark):
+    """Past the budget every grid cell holds ~N/B rows of EACH side, so a
+    cell's block shrinks with B.  (A design that replicates the whole
+    stream side into every bucket would report N stream rows per cell.)"""
+    import math
+
+    import pandas as pd
+
+    from recommend_spark.io import load_table
+
+    b = 4
+    need = b * blockkernel.MAX_STAGED_BYTES
+    assert blockkernel.n_buckets(need) == b
+    n = pq.ParquetFile(f"{SF_DIR}/embeddings.parquet").metadata.num_rows
+
+    def staged():
+        raise AssertionError("the grid path must stage nothing")
+
+    def count(stream_pdf, index_pdf):
+        yield pd.DataFrame(
+            {"n_stream": [len(stream_pdf)], "n_index": [len(index_pdf)]}
+        )
+
+    e = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    cells = blockkernel.block_join(
+        e,
+        e,
+        key="vec_id",
+        need_bytes=need,
+        stage=staged,
+        from_rows=lambda pdf: pdf,
+        score=count,
+        schema="n_stream long, n_index long",
+    ).collect()
+    assert len(cells) == b * b
+    bound = math.ceil(n / b) + 2  # slack for uneven id residues
+    assert all(r.n_stream <= bound and r.n_index <= bound for r in cells)
+    assert sum(r.n_stream for r in cells) == n * b
+    assert sum(r.n_index for r in cells) == n * b
 
 
 def _rows(df):

@@ -9,7 +9,9 @@ left behind after its knob is removed, fails here.
 
 It also keeps the broadcast-hint size gate single: a conditional
 ``F.broadcast(x) if … else x`` outside ``io.py`` is a second rule beside
-``io.hint_if`` and fails here.
+``io.hint_if`` and fails here.  Likewise the block kernels' staging rule:
+a ``MAX_STAGED_BYTES`` read or a ``.cogroup(`` call outside
+``blockkernel.py`` is a second copy of ``blockkernel.block_join``.
 """
 
 from __future__ import annotations
@@ -89,3 +91,28 @@ def test_conditional_broadcast_hints_go_through_hint_if():
             ):
                 found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not found, f"size-gate these hints with io.hint_if: {found}"
+
+
+
+def _ref_name(node) -> str | None:
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.alias):
+        return node.name
+    return None
+
+
+def test_staging_rule_lives_in_blockkernel():
+    """The block kernels' stage-or-grid choice is made once, in
+    ``blockkernel.block_join``: another engine module that reads
+    ``MAX_STAGED_BYTES`` or calls ``.cogroup(`` is a second copy of it."""
+    found = []
+    for path in (ROOT / "recommend_spark").rglob("*.py"):
+        if path.name == "blockkernel.py" and path.parent.name == "recommend_spark":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if _ref_name(node) in ("MAX_STAGED_BYTES", "cogroup"):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not found, f"route these through blockkernel.block_join: {found}"
