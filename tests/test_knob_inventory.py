@@ -93,7 +93,6 @@ def test_conditional_broadcast_hints_go_through_hint_if():
     assert not found, f"size-gate these hints with io.hint_if: {found}"
 
 
-
 def _ref_name(node) -> str | None:
     if isinstance(node, ast.Attribute):
         return node.attr
