@@ -5,7 +5,8 @@ dense block per Arrow batch:
 
 - ``sim_knn_join``: float64 cosine blocks, per-query top-k;
 - ``dedup_embed_cosine``: the same blocks, every pair at or over tau;
-- ``bitset_gemm_pairs`` (``dedup_containment``, ``join_set_similarity``):
+- ``bitset_gemm_pairs`` (``dedup_containment``, ``join_set_similarity``
+  and the exact Jaccard pair tables behind ``dedup_near_jaccard``):
   float32 0/1 incidence GEMM blocks, pairs at or over a set metric.
 
 ``block_join`` runs all three.  The one decision is ``n_buckets``: when the
@@ -354,7 +355,7 @@ def bitset_gemm_pairs(
     n_index_toks,
     metric,
     tau,
-    exclude_self=False,
+    pair_mask=None,
     spread=False,
 ):
     """All qualifying (stream, index) set-intersection pairs via a dense
@@ -377,6 +378,13 @@ def bitset_gemm_pairs(
     candidate shuffle, no pair materialization beyond the qualifying
     output.  Past it, ``block_join``'s grid builds each cell's matrix
     executor-side and NOTHING is collected to the driver.
+
+    Callers: ``join_set_similarity`` (corpus stream × probe index) and
+    two self-joins over one corpus, ``dedup_containment`` (directional,
+    ``pair_mask=operator.ne``) and the exact Jaccard pair tables
+    (symmetric, ``pair_mask=operator.lt``).  The mask is ANDed into the
+    dense prefilter block, so a symmetric pair is divided and leaves
+    Python once.
 
     The driver footprint counts both the f32 incidence matrix
     (``n_index`` × |V| × 4) and the Python-object cost of collecting the
@@ -401,7 +409,10 @@ def bitset_gemm_pairs(
       metric: 'containment' (n_common / nt_stream) or
         'jaccard' (n_common / (nt_stream + nt_index − n_common)).
       tau: qualifying threshold, metric ≥ tau.
-      exclude_self: drop stream id == index id pairs (self-join mode).
+      pair_mask: optional elementwise ``f(sid, iid) -> bool`` over id
+        arrays; only pairs it keeps leave the kernel.  Self-joins pass
+        ``operator.ne`` (directional: drop each doc against itself) or
+        ``operator.lt`` (symmetric: each unordered pair once).
       spread: ``block_join``'s staged-path stream spread.
 
     Returns a DataFrame (sid long, iid long, n_common long, metric
@@ -449,7 +460,7 @@ def bitset_gemm_pairs(
             vocab_map=vocab_map,
             metric=metric,
             tau=tau,
-            exclude_self=exclude_self,
+            pair_mask=pair_mask,
         ),
         schema="sid long, iid long, n_common long, metric double",
         spread=spread,
@@ -468,7 +479,7 @@ def _toks_matrix(tok_lists, vocab_map):
     return m
 
 
-def _score_bitset_blocks(pdf, value, *, vocab_map, metric, tau, exclude_self):
+def _score_bitset_blocks(pdf, value, *, vocab_map, metric, tau, pair_mask):
     """The bitset kernel's ``block_join`` scorer: a stream batch against
     an (ids, nt, float32 incidence matrix) index value.  Yields pandas
     frames of qualifying (sid, iid, n_common, metric) pairs."""
@@ -499,6 +510,8 @@ def _score_bitset_blocks(pdf, value, *, vocab_map, metric, tau, exclude_self):
             pre = c >= np.floor(
                 (tau / (1.0 + tau)) * (s_nt[lo:hi, None] + b_nt[None, :])
             ).astype(np.float32)
+        if pair_mask is not None:
+            pre &= pair_mask(s_ids[lo:hi, None], b_ids[None, :])
         si, ii = np.nonzero(pre)
         if len(si) == 0:
             continue
@@ -508,8 +521,6 @@ def _score_bitset_blocks(pdf, value, *, vocab_map, metric, tau, exclude_self):
         with np.errstate(divide="ignore", invalid="ignore"):
             val = cs / denom
         ok = (denom > 0) & (val >= tau)
-        if exclude_self:
-            ok &= s_ids[lo + si] != b_ids[ii]
         if not ok.any():
             continue
         yield pd.DataFrame(

@@ -239,7 +239,7 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     return f"{sf_key(sf_dir)}_{name}_{st.st_size}_{st.st_mtime_ns}_{crc:08x}"
 
 
-def stats_memo(key: str, compute) -> dict:
+def stats_memo(key: str | None, compute) -> dict:
     """ANALYZE-style statistics catalog: a tiny JSON memo of SCALAR plan
     statistics under ART_ROOT/stats/<key>.json.
 
@@ -256,9 +256,14 @@ def stats_memo(key: str, compute) -> dict:
     pattern: compute once per ingest, plan from metadata thereafter.
 
     ``compute`` must return a JSON-serializable dict.  Writes are
-    atomic (tmp + rename) so concurrent builders race benignly."""
+    atomic (tmp + rename) so concurrent builders race benignly.  A
+    caller with no content fingerprint (a synthetic frame) passes
+    ``key=None`` and gets ``compute()`` unmemoized, so keyed and
+    keyless callers share one statistics path."""
     import json
 
+    if key is None:
+        return compute()
     path = Path(ART_ROOT) / "stats" / f"{key}.json"
     if path.exists():
         try:

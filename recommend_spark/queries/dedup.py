@@ -15,6 +15,8 @@ Five dedup families, each with the shape that survives 100 TB:
 
 from __future__ import annotations
 
+import operator
+
 import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
@@ -33,7 +35,9 @@ from ..io import (
     hint_if,
     load_table,
     sf_key,
+    stats_memo,
     table_file_bytes,
+    table_fingerprint,
     table_rows,
 )
 from ..registry import register
@@ -89,23 +93,22 @@ def _pairs_artifact(spark, sf_dir, variant, build):
 
 
 def _word_pairs_cached(spark, sf_dir):
-    from ..io import table_fingerprint
-
     return _pairs_artifact(
         spark,
         sf_dir,
         "word",
         lambda: _jaccard_pairs_exact(
             load_table(spark, sf_dir, "documents"),
-            stats_key=f"corpus_words_v1_{table_fingerprint(sf_dir, 'documents')}",
+            stats_key=f"corpus_words_v2_{table_fingerprint(sf_dir, 'documents')}",
         ),
     )
 
 
 def _token_sigs(docs, toks_expr, stats_key: str | None = None):
-    """Tokenized corpus + compact rescore signatures, shared by the exact
-    prefix pipeline (_jaccard_pairs_exact) and the banded rescore
-    (dedup_minhash_banded).
+    """Tokenized corpus, compact rescore signatures and the gate
+    statistics, shared by the exact Jaccard pipeline
+    (_jaccard_pairs_exact), directional containment (_containment_pairs)
+    and the banded rescore (dedup_minhash_banded).
 
     Persists the tokenized form: freq/ranked/sig/prefix all fan out from
     it, and without a persist every consumer re-runs text -> token-array
@@ -117,23 +120,24 @@ def _token_sigs(docs, toks_expr, stats_key: str | None = None):
     tokens get bitmask slots, up to 16 longs = 1024 bits.  A small
     vocabulary (word tokens; shingles of a templated corpus) collapses
     ENTIRELY into the mask — rare arrays empty, rescore = pure popcount;
-    a web-scale vocabulary keeps the top-1024 hybrid.  One tiny count()
-    job buys the right plan shape.
+    a web-scale vocabulary keeps the top-1024 hybrid.
 
-    ``stats_key`` (a content fingerprint of the corpus + a toks-semantics
-    tag) routes that count — plus the corpus footprint (n_docs, n_toks)
-    the containment/banded consumers gate their broadcasts on — through
-    the io.stats_memo catalog: the first build over a given corpus file
-    runs the two tiny jobs, every later build plans JOB-FREE (r12
-    verdict item 5).  Keyless callers (tests over synthetic frames)
-    stay eager and get stats["n_docs"] = None, meaning "compute your
-    own if you need it"."""
+    This is the one owner of the gate statistics: a single io.stats_memo
+    call returns ``stats`` = {n_vocab, n_docs, n_toks, kvocab}.
+    ``kvocab`` is the whole vocabulary when it fits the mask universe
+    (≤1024 tokens — the degenerate regime the consumers route to the
+    bitset GEMM kernel) and None otherwise; its order is the kernel's
+    token→column map, so memoizing it pins that map across builds.
+    With ``stats_key`` (a content fingerprint of the corpus + a
+    toks-semantics tag) only the first build over a given corpus file
+    runs the stats jobs and every later build plans JOB-FREE from the
+    catalog (r12 verdict item 5); keyless callers (tests over synthetic
+    frames) get the same dict computed eagerly."""
     import math as _math
 
     # documents.parquet is a single file -> 1 input partition; spread before
-    # tokenize so every downstream stage (explode, rescore, and especially
-    # the broadcast-nested-loop fast path, whose probe side inherits THIS
-    # partitioning) parallelizes instead of running as one task.
+    # tokenize so every downstream stage (explode, rescore) parallelizes
+    # instead of running as one task.
     d = (
         docs.select("doc_id", toks_expr.alias("toks"))
         .withColumn("nt", F.size("toks"))
@@ -142,22 +146,21 @@ def _token_sigs(docs, toks_expr, stats_key: str | None = None):
     )
     tok = d.select("doc_id", "nt", F.explode("toks").alias("w"))
     freq = tok.groupBy("w").agg(F.count("*").alias("freq")).persist()
-    if stats_key:
-        from ..io import stats_memo
 
-        def _corpus_stats() -> dict:
-            row = d.agg(F.count("*"), F.sum("nt")).first()
-            return {
-                "n_vocab": freq.count(),
-                "n_docs": row[0],
-                "n_toks": row[1] or 0,
-            }
+    def _corpus_stats() -> dict:
+        n_vocab = freq.count()
+        n_docs, n_toks = d.agg(F.count("*"), F.sum("nt")).first()
+        return {
+            "n_vocab": n_vocab,
+            "n_docs": n_docs,
+            "n_toks": n_toks or 0,
+            "kvocab": (
+                [r["w"] for r in freq.collect()] if n_vocab <= 1024 else None
+            ),
+        }
 
-        stats = stats_memo(stats_key, _corpus_stats)
-    else:
-        stats = {"n_vocab": freq.count(), "n_docs": None, "n_toks": None}
-    n_vocab = stats["n_vocab"]
-    n_slots = min(16, max(1, _math.ceil(min(n_vocab, 1024) / 64)))
+    stats = stats_memo(stats_key, _corpus_stats)
+    n_slots = min(16, max(1, _math.ceil(min(stats["n_vocab"], 1024) / 64)))
     top_bits = n_slots * 64
     # limit-then-rank keeps the window on <= 1024 rows (never a
     # full-vocab single-task sort)
@@ -192,16 +195,36 @@ def _token_sigs(docs, toks_expr, stats_key: str | None = None):
             F.collect_list(F.when(F.col("bit").isNull(), F.col("w")))
         ).alias("rare"),
     )
-    return dict(
-        d=d,
-        tok=tok,
-        freq=freq,
-        n_vocab=n_vocab,
-        n_slots=n_slots,
-        top_bits=top_bits,
-        ranked=ranked,
-        sig=sig,
-        stats=stats,
+    return dict(d=d, n_slots=n_slots, ranked=ranked, sig=sig, stats=stats)
+
+
+def _kernel_self_pairs(parts, metric, tau, pair_mask, min_nt=0):
+    """Degenerate-vocabulary self-join of _token_sigs' corpus through the
+    bitset GEMM kernel (blockkernel.bitset_gemm_pairs: staged map-only
+    within the driver budget, the bucket grid past it).  Docs with fewer
+    than ``min_nt`` tokens sit on the index side only; ``pair_mask``
+    picks which (stream, index) id pairs leave the kernel.  The stream is
+    re-spread to the core count: one Python task per tokenize partition
+    (32) costs more than the kernel on a small corpus (sf0.01 word
+    pairs, local[4]: ~1.3 s against ~0.4 s to run the kernel).  Returns
+    (doc_a, doc_b, n_common int, <metric> double)."""
+    st = parts["stats"]
+    side = parts["d"].select(F.col("doc_id").alias("id"), "nt", "toks")
+    return bitset_gemm_pairs(
+        side.filter(F.col("nt") >= min_nt),
+        side,
+        {w: i for i, w in enumerate(st["kvocab"])},
+        n_index=st["n_docs"],
+        n_index_toks=st["n_toks"],
+        metric=metric,
+        tau=tau,
+        pair_mask=pair_mask,
+        spread=True,
+    ).select(
+        F.col("sid").alias("doc_a"),
+        F.col("iid").alias("doc_b"),
+        F.col("n_common").cast("int").alias("n_common"),
+        F.col("metric").alias(metric),
     )
 
 
@@ -221,61 +244,26 @@ def _jaccard_pairs_exact(docs, toks_expr=None, stats_key: str | None = None):
     ADAPTIVE width: the most frequent tokens map to bits of 1..16 LONGs
     (width picked from the observed vocabulary size, AQE-style), so each
     pair's intersection is a few bit_count(maskA & maskB) ops plus an
-    array_intersect over only the *rare* remainder.  Small vocabularies
-    (word tokens; shingles of a templated corpus) collapse entirely into
-    the mask — empty rare arrays, pure-popcount rescore; web-scale
+    array_intersect over only the *rare* remainder; web-scale
     vocabularies keep the top-1024 hybrid, where Zipf keeps rare arrays
     short.
+
+    Degenerate vocabulary (the whole vocabulary fits the 1024-bit mask:
+    word tokens and shingles of a templated corpus): every token is
+    frequent, so prefix filtering cannot prune and the candidate join
+    would materialize near-all-pairs.  That regime takes the bitset GEMM
+    kernel instead, the one dedup_containment and join_set_similarity
+    use (blockkernel.bitset_gemm_pairs): staged and map-only within the
+    driver budget, the bucket grid past it, each unordered pair emitted
+    once (``sid < iid``).  The route reads _token_sigs' gate statistics,
+    memoized under ``stats_key``.
     """
     if toks_expr is None:
         toks_expr = _TOKS()
     parts = _token_sigs(docs, toks_expr, stats_key=stats_key)
-    d, tok, freq = parts["d"], parts["tok"], parts["freq"]
-    n_vocab, n_slots = parts["n_vocab"], parts["n_slots"]
-    top_bits, ranked, sig = parts["top_bits"], parts["ranked"], parts["sig"]
-    # Degenerate-vocabulary fast path: when the whole vocabulary fits in
-    # the mask (rare arrays empty) AND the signature table is broadcast-
-    # sized, prefix filtering cannot discriminate (every token is
-    # frequent) — the candidate join materializes near-all-pairs anyway,
-    # paying shuffle + distinct for nothing.  Instead broadcast the
-    # signatures and popcount-join all pairs map-side: zero shuffle,
-    # ~5 codegen ops per pair.  Web-scale corpora (vocab > mask bits, or
-    # too many docs to broadcast) always take the prefix path below.
-    if n_vocab <= top_bits:
-        n_docs = parts["stats"]["n_docs"]
-        if n_docs is None:
-            n_docs = d.count()
-        if n_docs <= 20_000:
-            sa0 = sig.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("nt").alias("na"),
-                *[F.col(f"mask{s}").alias(f"ma{s}") for s in range(n_slots)],
-            )
-            sb0 = sig.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("nt").alias("nb"),
-                *[F.col(f"mask{s}").alias(f"mb{s}") for s in range(n_slots)],
-            )
-            pc = sum(
-                F.bit_count(F.col(f"ma{s}").bitwiseAND(F.col(f"mb{s}")))
-                for s in range(n_slots)
-            )
-            return (
-                sa0.join(
-                    F.broadcast(sb0),
-                    (F.col("doc_a") < F.col("doc_b"))
-                    & (F.col("na") * _JACCARD_TAU <= F.col("nb"))
-                    & (F.col("nb") * _JACCARD_TAU <= F.col("na")),
-                )
-                .withColumn("n_common", pc.cast("int"))
-                .withColumn(
-                    "jaccard",
-                    F.col("n_common").cast("double")
-                    / (F.col("na") + F.col("nb") - F.col("n_common")),
-                )
-                .filter(F.col("jaccard") >= _JACCARD_TAU)
-                .select("doc_a", "doc_b", "n_common", "jaccard")
-            )
+    if parts["stats"]["kvocab"] is not None:
+        return _kernel_self_pairs(parts, "jaccard", _JACCARD_TAU, operator.lt)
+    ranked, sig, n_slots = parts["ranked"], parts["sig"], parts["n_slots"]
     prefix = ranked.filter(
         F.col("r") <= F.col("nt") - F.ceil(_JACCARD_TAU * F.col("nt")) + 1
     ).select("doc_id", "nt", "r", "w")
@@ -396,7 +384,9 @@ def dedup_containment(spark, sf_dir):
     matrix, the A side streams through mapInPandas, and each pair's
     exact intersection is one integer-exact float32 GEMM cell
     (blockkernel.bitset_gemm_pairs; past the driver staging budget it
-    runs on blockkernel.block_join's bucket grid instead).
+    runs on blockkernel.block_join's bucket grid instead).  The route and
+    the kernel vocabulary come from _token_sigs' memoized statistics,
+    the entry the word-token Jaccard pairs read too.
     n_common and na are exact ints; the single division then one
     compare is bit-deterministic in both engines.
 
@@ -418,8 +408,6 @@ def dedup_containment(spark, sf_dir):
     MORE than the kernel saves (sf0.1 noop min-of-3: collapse 2.78 s vs
     direct 1.89 s), so mildly-replicated corpora take the direct path
     with zero overhead beyond the memoized stat."""
-    from ..io import stats_memo, table_fingerprint
-
     docs = load_table(spark, sf_dir, "documents")
     fp = table_fingerprint(sf_dir, "documents")
     keyed = docs.select(
@@ -437,10 +425,10 @@ def dedup_containment(spark, sf_dir):
     )
     if st["n_sets"] > _CONTAIN_COLLAPSE_RATIO * st["n_docs"]:
         return _containment_pairs(
-            docs, stats_key=f"corpus_words_v1_{fp}"
+            docs, stats_key=f"corpus_words_v2_{fp}"
         )
     return _containment_collapsed(
-        keyed, stats_key=f"corpus_words_collapsed_v1_{fp}"
+        keyed, stats_key=f"corpus_words_collapsed_v2_{fp}"
     )
 
 
@@ -493,23 +481,13 @@ def _containment_collapsed(keyed, stats_key: str | None = None):
     return cross.unionAll(intra)
 
 
-def _containment_pairs(
-    docs,
-    toks_expr=None,
-    force_prefix_path: bool = False,
-    stats_key: str | None = None,
-):
-    """Directional containment pairs; see dedup_containment.  The
-    ``force_prefix_path`` hook lets tests exercise the web-scale prefix
-    pipeline on corpora that would otherwise take the GEMM kernel
-    path.
+def _containment_pairs(docs, toks_expr=None, stats_key: str | None = None):
+    """Directional containment pairs; see dedup_containment.
 
-    DELIBERATELY EAGER in the degenerate-vocabulary regime: the
-    kernel-vs-prefix route is data-dependent (vocab size, corpus
-    footprint), so the FIRST build over a given corpus file runs the
-    gate's stats jobs; with ``stats_key`` set they memoize into the
-    io.stats_memo catalog (ANALYZE-style) and later builds read the
-    scalars + the ≤1024-token kernel vocabulary job-free (r12 verdict
+    The kernel-vs-prefix route is data-dependent (vocabulary size), so
+    it reads _token_sigs' gate statistics: the first build over a given
+    corpus file runs the stats jobs, and with ``stats_key`` set later
+    builds plan job-free from the io.stats_memo catalog (r12 verdict
     item 5).  The staged kernel path still collects the gated-size
     corpus driver-side at build — that collect IS the broadcast
     operand's materialization (a BroadcastExchange by hand), bounded
@@ -517,11 +495,20 @@ def _containment_pairs(
     if toks_expr is None:
         toks_expr = _TOKS()
     parts = _token_sigs(docs, toks_expr, stats_key=stats_key)
-    d, sig, ranked = parts["d"], parts["sig"], parts["ranked"]
-    n_vocab, n_slots, top_bits = (
-        parts["n_vocab"], parts["n_slots"], parts["top_bits"],
-    )
     tau, min_n = _CONTAIN_TAU, _CONTAIN_MIN_TOKENS
+    if parts["stats"]["kvocab"] is not None:
+        # Degenerate-vocabulary regime: the whole vocabulary fits the
+        # mask universe, which means token posting lists are each a large
+        # fraction of the corpus and the one-sided prefix join below
+        # degenerates toward the quadratic candidate space (measured at
+        # the perturbed sf1 campaign corpus: 147 s for ~55M true pairs —
+        # >100× candidate waste).  Route to the bitset GEMM block kernel:
+        # every pair's exact intersection is one float32 GEMM cell
+        # (integer-exact; see bitset_gemm_pairs).
+        return _kernel_self_pairs(
+            parts, "containment", tau, operator.ne, min_nt=min_n
+        )
+    sig, ranked, n_slots = parts["sig"], parts["ranked"], parts["n_slots"]
 
     def rescore(pairs_ab):
         sa = sig.filter(F.col("nt") >= min_n).select(
@@ -551,58 +538,6 @@ def _containment_pairs(
             )
             .filter(F.col("containment") >= tau)
             .select("doc_a", "doc_b", "n_common", "containment")
-        )
-
-    if not force_prefix_path and n_vocab <= top_bits:
-        # Degenerate-vocabulary regime: the whole vocabulary fits the
-        # mask universe, which means token posting lists are each a large
-        # fraction of the corpus and the one-sided prefix join below
-        # degenerates toward the quadratic candidate space (measured at
-        # the perturbed sf1 campaign corpus: 147 s for ~55M true pairs —
-        # >100× candidate waste).  Route to the bitset GEMM block kernel:
-        # the corpus ships as an N×|V| float32 incidence matrix, the A
-        # side streams map-only, and every pair's exact intersection is
-        # one float32 GEMM cell (integer-exact; see bitset_gemm_pairs).
-        if parts["stats"]["n_docs"] is not None:
-            n_docs, n_toks = parts["stats"]["n_docs"], parts["stats"]["n_toks"]
-        else:
-            stats = d.agg(F.count("*"), F.sum("nt")).first()
-            n_docs, n_toks = stats[0], stats[1] or 0
-        # kernel vocabulary is ≤ top_bits ≤ 1024 tokens on this route —
-        # small enough to live in the stats catalog, so warm builds skip
-        # the collect; the token→column assignment only has to be SOME
-        # fixed order, and memoizing pins it stable across builds
-        if stats_key:
-            from ..io import stats_memo
-
-            kv = stats_memo(
-                f"{stats_key}_kvocab",
-                lambda: {"words": [r["w"] for r in parts["freq"].collect()]},
-            )["words"]
-        else:
-            kv = [r["w"] for r in parts["freq"].collect()]
-        vocab_map = {w: i for i, w in enumerate(kv)}
-        stream = d.filter(F.col("nt") >= min_n).select(
-            F.col("doc_id").alias("id"), "nt", "toks"
-        )
-        # a corpus too big to stage driver-side, with a vocabulary still
-        # degenerate (the prefix path would candidate-explode), takes the
-        # bucket grid: cells shuffle instead of staging
-        pairs = bitset_gemm_pairs(
-            stream,
-            d.select(F.col("doc_id").alias("id"), "nt", "toks"),
-            vocab_map,
-            n_index=n_docs,
-            n_index_toks=n_toks,
-            metric="containment",
-            tau=tau,
-            exclude_self=True,
-        )
-        return pairs.select(
-            F.col("sid").alias("doc_a"),
-            F.col("iid").alias("doc_b"),
-            F.col("n_common").cast("int").alias("n_common"),
-            F.col("metric").alias("containment"),
         )
 
     a_pref = ranked.filter(F.col("nt") >= min_n).filter(
@@ -654,10 +589,12 @@ def _containment_pairs(
 def dedup_near_jaccard(spark, sf_dir):
     """Exact near-duplicate pairs with token-set Jaccard >= 0.8.
 
-    Spark side uses lossless prefix filtering (no cross join); the DuckDB
-    oracle does the quadratic join — same result set by the prefix lemma.
-    The pair table is materialized once per (session, corpus) and shared
-    with dedup_cluster."""
+    Spark side (_jaccard_pairs_exact) never cross-joins: a web-scale
+    vocabulary takes lossless prefix filtering, a degenerate one (≤1024
+    tokens — the fixtures' 31 words) the bitset GEMM kernel shared with
+    dedup_containment.  The DuckDB oracle does the quadratic join — the
+    same result set.  The pair table is materialized once per corpus and
+    shared with dedup_cluster."""
     return _word_pairs_cached(spark, sf_dir)
 
 
@@ -1089,13 +1026,11 @@ def dedup_ngram_jaccard(spark, sf_dir):
                 lambda x, y: F.concat_ws(" ", x, y),
             )
         )
-        from ..io import table_fingerprint
-
         return _jaccard_pairs_exact(
             t,
             toks_expr=shingles,
             stats_key=(
-                f"corpus_bigrams_v1_{table_fingerprint(sf_dir, 'documents')}"
+                f"corpus_bigrams_v2_{table_fingerprint(sf_dir, 'documents')}"
             ),
         )
 
@@ -1516,14 +1451,12 @@ def dedup_minhash_banded(spark, sf_dir):
 
 
 def _minhash_banded_pairs(spark, sf_dir):
-    from ..io import table_fingerprint
-
     # th below is token-derived (unbounded vocab at web scale): its hint
     # is gated on corpus file bytes x decompression factor (io.hint_if)
     return _minhash_banded_pairs_from(
         load_table(spark, sf_dir, "documents"),
         th_est_bytes=table_file_bytes(sf_dir, "documents") * 8,
-        stats_key=f"corpus_words_v1_{table_fingerprint(sf_dir, 'documents')}",
+        stats_key=f"corpus_words_v2_{table_fingerprint(sf_dir, 'documents')}",
     )
 
 
@@ -1574,7 +1507,7 @@ def _minhash_banded_pairs_from(
     # distinct shuffle, so only true pairs (plus their <= 8x band
     # duplication) ever shuffle.
     parts = _token_sigs(docs, _TOKS(), stats_key=stats_key)
-    sig, n_slots = parts["sig"], parts["n_slots"]
+    sig, n_slots, st = parts["sig"], parts["n_slots"], parts["stats"]
     # SIZE-GATED broadcast (r11 verdict item 1): an unconditional hint
     # pins the FULL per-doc signature table into every executor — right
     # at fixture scale, a hard OOM at 1e8+ docs, and AQE cannot override
@@ -1582,16 +1515,9 @@ def _minhash_banded_pairs_from(
     # collected_toks_bytes, which over-estimates the sig table (rare ⊆
     # toks, and mask longs are within the per-row constant; 9.3 MiB at
     # sf0.1); past the budget the rescore joins run plain and AQE picks
-    # the strategy.  The stats come from _token_sigs' memoized corpus
-    # footprint when a stats_key is set (job-free on a warm catalog);
-    # keyless callers pay the one tiny agg on the already-persisted
-    # tokenized corpus.
-    if parts["stats"]["n_docs"] is not None:
-        n_docs, n_toks = parts["stats"]["n_docs"], parts["stats"]["n_toks"]
-    else:
-        stats = parts["d"].agg(F.count("*"), F.sum("nt")).first()
-        n_docs, n_toks = stats[0], stats[1] or 0
-    sig_bytes = blockkernel.collected_toks_bytes(n_docs, n_toks)
+    # the strategy.  The footprint is _token_sigs' corpus statistics
+    # (job-free on a warm catalog).
+    sig_bytes = blockkernel.collected_toks_bytes(st["n_docs"], st["n_toks"])
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("rare").alias("rare_a"),

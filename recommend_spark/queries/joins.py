@@ -25,7 +25,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from ..canon import r4
-from ..io import hint_if, load_table, sf_key, spread_width, stage, table_file_bytes, table_rows
+from ..io import (
+    hint_if,
+    load_table,
+    sf_key,
+    spread_width,
+    stage,
+    stats_memo,
+    table_file_bytes,
+    table_fingerprint,
+    table_rows,
+)
 from ..registry import register
 
 
@@ -1053,8 +1063,6 @@ def join_set_similarity(spark, sf_dir):
         "doc_id",
         F.array_distinct(F.split(F.lower(F.col("text")), " ")).alias("toks"),
     )
-    from ..io import table_fingerprint
-
     # the prefix path's vocab hint is gated on corpus file bytes (the
     # vocab table is token-derived, unbounded at web scale)
     return _set_similarity_pairs(
@@ -1076,7 +1084,7 @@ def _set_similarity_pairs(
     probe footprint) and the ≤1024-token kernel vocabulary into the
     io.stats_memo catalog, so only the FIRST build over a given corpus
     file runs the gate jobs (r12 verdict item 5); keyless test callers
-    stay eager."""
+    compute them on every build."""
     toks = docs.select(
         "doc_id", F.size("toks").alias("nt"), F.explode("toks").alias("tok")
     )
@@ -1115,12 +1123,7 @@ def _set_similarity_pairs(
                 out["toks"] = [r["tok"] for r in vocab.collect()]
             return out
 
-        if stats_key:
-            from ..io import stats_memo
-
-            gs = stats_memo(stats_key, _ssj_stats)
-        else:
-            gs = _ssj_stats()
+        gs = stats_memo(stats_key, _ssj_stats)
         n_vocab = gs["n_vocab"]
         if n_vocab <= 1024:
             n_probes, n_ptoks = gs["n_probes"], gs["n_ptoks"]

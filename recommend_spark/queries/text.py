@@ -685,7 +685,7 @@ def _er_name_pairs(
     for tests.  ``stats_key`` (a content fingerprint of the input) lets
     the cost gate read its three candidate counts from the io.stats_memo
     catalog instead of re-running the gate aggregates on every build;
-    direct test callers over synthetic frames pass None and stay eager.
+    direct test callers over synthetic frames pass None and recompute.
 
     Three lossless routes, cost-gated (r12 verdict item 1):
 
@@ -768,7 +768,7 @@ def _er_name_pairs(
                 "sum_distinct_pairs": blk["sd"] or 0,
             }
 
-        gs = stats_memo(stats_key, _gate_stats) if stats_key else _gate_stats()
+        gs = stats_memo(stats_key, _gate_stats)
         n_prefix_cand = gs["n_prefix_cand"]
         n_block_cand = gs["n_block_cand"]
         # collapsed route scores DISTINCT-name pairs only; the ×2 charges

@@ -215,14 +215,20 @@ def test_stream_tiling_identical_broadcast_paths(spark, monkeypatch):
 
 
 def test_stream_tiling_identical_bucketed_paths(spark, monkeypatch):
-    """Same pin for the cogroup fallbacks: tiny staging budget forces the
-    bucketed route, tiny tile budget forces many stream tiles per cell."""
-    knn = _rows(QUERIES["sim_knn_join"](spark, SF_DIR))
-    pairs = _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR))
-    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1 << 18)
+    """Same pin for the grid: a staging budget below the 500×64×8 =
+    256,000 B embedding matrix forces the bucket grid, and a tiny tile
+    budget forces many stream tiles per cell."""
+    want = {
+        q: _rows(QUERIES[q](spark, SF_DIR))
+        for q in ("sim_knn_join", "dedup_embed_cosine")
+    }
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 1 << 17)
     monkeypatch.setattr(blockkernel, "STREAM_TILE_BYTES", 4096)
-    assert _rows(QUERIES["sim_knn_join"](spark, SF_DIR)) == knn
-    assert _rows(QUERIES["dedup_embed_cosine"](spark, SF_DIR)) == pairs
+    for q, rows in want.items():
+        df = QUERIES[q](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" in plan, q
+        assert _rows(df) == rows, q
 
 
 def test_topk_by_value_then_id_matches_lexsort_reference():

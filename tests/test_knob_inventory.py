@@ -11,7 +11,9 @@ It also keeps the broadcast-hint size gate single: a conditional
 ``F.broadcast(x) if … else x`` outside ``io.py`` is a second rule beside
 ``io.hint_if`` and fails here.  Likewise the block kernels' staging rule:
 a ``MAX_STAGED_BYTES`` read or a ``.cogroup(`` call outside
-``blockkernel.py`` is a second copy of ``blockkernel.block_join``.
+``blockkernel.py`` is a second copy of ``blockkernel.block_join``.  And
+the statistics path: an ``if`` or ternary that tests ``stats_key`` is a
+second path beside ``io.stats_memo``, which takes ``None`` itself.
 """
 
 from __future__ import annotations
@@ -115,3 +117,17 @@ def test_staging_rule_lives_in_blockkernel():
             if _ref_name(node) in ("MAX_STAGED_BYTES", "cogroup"):
                 found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not found, f"route these through blockkernel.block_join: {found}"
+
+
+def test_stats_key_is_never_branched_on():
+    """Keyed and keyless callers share one line, ``io.stats_memo(key,
+    compute)`` (``key=None`` computes unmemoized): a branch on
+    ``stats_key`` is a second statistics path."""
+    found = []
+    for path in (ROOT / "recommend_spark").rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.If, ast.IfExp)) and any(
+                _ref_name(n) == "stats_key" for n in ast.walk(node.test)
+            ):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not found, f"pass stats_key to io.stats_memo instead: {found}"

@@ -261,7 +261,9 @@ def test_containment_prefix_path_matches_brute_force(spark):
     rng = random.Random(13)
     vocab = [f"tok{i:05d}" for i in range(1500)]
     docs = []
-    for doc_id in range(60):
+    # 90 docs draw 1,124 distinct tokens (60 drew only 937, the kernel's
+    # regime)
+    for doc_id in range(90):
         n = rng.randint(5, 40)
         toks = rng.sample(vocab, n)
         docs.append((doc_id, " ".join(toks)))
@@ -273,10 +275,10 @@ def test_containment_prefix_path_matches_brute_force(spark):
         docs.append((100 + k, " ".join(base + rng.sample(vocab, 3))))
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    got = {
-        (r["doc_a"], r["doc_b"], r["n_common"])
-        for r in _containment_pairs(df, force_prefix_path=True).collect()
-    }
+    out = _containment_pairs(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, "a >1024-token vocabulary takes the prefix path"
+    got = {(r["doc_a"], r["doc_b"], r["n_common"]) for r in out.collect()}
 
     sets = {i: set(t.lower().split()) for i, t in docs}
     want = set()
@@ -1156,6 +1158,93 @@ def test_gemm_kernel_bucketed_fallback_matches_broadcast(spark, monkeypatch):
     assert rows(bucketed_ssj) == base_ssj
 
 
+def _jaccard_brute_force(docs):
+    """Every (a < b) pair with token-set Jaccard >= tau.  Tokens split on
+    single spaces exactly like Spark's split(lower(text), ' '), so an
+    empty text is the one-token set {''}."""
+    from recommend_spark.queries.dedup import _JACCARD_TAU
+
+    sets = {i: set(t.lower().split(" ")) for i, t in docs}
+    want = set()
+    for a, ta in sets.items():
+        for b, tb in sets.items():
+            if a < b:
+                inter = len(ta & tb)
+                j = inter / (len(ta) + len(tb) - inter)
+                if j >= _JACCARD_TAU:
+                    want.add((a, b, inter, j))
+    assert want, "fixture must contain at least one qualifying pair"
+    return want
+
+
+def _plant_jaccard_pairs(docs, vocab):
+    """Planted pairs at J = 1 (a copy, two empty texts), J = 12/13 (one
+    extra token) and J = 11/13 (one token swapped); ids are positions."""
+    docs[10] = (10, docs[5][1])
+    docs[20] = (20, " ".join(vocab[:12]))
+    docs[21] = (21, " ".join(vocab[:13]))
+    docs[22] = (22, " ".join(vocab[1:13]))
+    docs[30] = (30, "")
+    docs[31] = (31, "")
+    return docs
+
+
+def _jaccard_run(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    rows = {
+        (r["doc_a"], r["doc_b"], r["n_common"], r["jaccard"])
+        for r in df.collect()
+    }
+    return plan, rows
+
+
+def test_jaccard_kernel_matches_brute_force_staged_and_grid(spark, monkeypatch):
+    """A ≤1024-token vocabulary sends _jaccard_pairs_exact to the bitset
+    GEMM kernel: staged map-only within the budget, the bucket grid past
+    it.  Both return EXACTLY the brute-force pairs (ids, counts and the
+    float64 Jaccard), each unordered pair once."""
+    import random
+
+    from recommend_spark import blockkernel
+    from recommend_spark.queries.dedup import _jaccard_pairs_exact
+
+    docs = _plant_jaccard_pairs(
+        _degenerate_corpus(random.Random(37), 90, 48, lambda k: k),
+        [f"w{i:03d}" for i in range(48)],
+    )
+    want = _jaccard_brute_force(docs)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    plan, staged = _jaccard_run(_jaccard_pairs_exact(df))
+    assert "MapInPandas" in plan and "FlatMapCoGroupsInPandas" not in plan
+    assert staged == want
+
+    monkeypatch.setattr(blockkernel, "MAX_STAGED_BYTES", 2048)
+    plan, grid = _jaccard_run(_jaccard_pairs_exact(df))
+    assert "FlatMapCoGroupsInPandas" in plan, plan[:2000]
+    assert grid == want
+
+
+def test_jaccard_prefix_path_matches_brute_force(spark):
+    """A >1024-token vocabulary keeps _jaccard_pairs_exact on the PPJoin
+    prefix filter (no kernel), with the same exact pairs."""
+    import random
+
+    from recommend_spark.queries.dedup import _jaccard_pairs_exact
+
+    rng = random.Random(43)
+    vocab = [f"tok{i:05d}" for i in range(1500)]
+    # 90 docs draw > 1024 distinct tokens
+    docs = [(k, " ".join(rng.sample(vocab, rng.randint(5, 40)))) for k in range(90)]
+    docs = _plant_jaccard_pairs(docs, vocab)
+    want = _jaccard_brute_force(docs)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    plan, got = _jaccard_run(_jaccard_pairs_exact(df))
+    assert "MapInPandas" not in plan
+    assert got == want
+
+
 def test_minhash_banded_rescore_broadcast_gate(spark, monkeypatch):
     """The banded-LSH rescore's signature-table broadcast is SIZE-GATED
     (r11 verdict item 1): with the hint budget (``io.BROADCAST_HINT_BUDGET``)
@@ -1202,7 +1291,7 @@ def test_minhash_banded_rescore_broadcast_gate(spark, monkeypatch):
     assert sorted(tuple(r) for r in gated.collect()) == base_rows
 
 
-def test_er_prefix_filter_lossless_vs_brute_force(spark, tmp_path):
+def test_er_prefix_filter_lossless_vs_brute_force(spark, tmp_path, monkeypatch):
     """Ed-Join positional q-gram prefix filter (er_name_match, r12): the
     rare-gram candidate join + position/length alignment must lose NO
     pair within edit distance 2 — including insert/delete edits that
@@ -1214,6 +1303,11 @@ def test_er_prefix_filter_lossless_vs_brute_force(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from recommend_spark import io
+
+    # the gate's stats entry is keyed by this run's tmp_path: keep it out
+    # of the shared artifact root
+    monkeypatch.setattr(io, "ART_ROOT", str(tmp_path))
     rng = random.Random(41)
     alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
     names = []
