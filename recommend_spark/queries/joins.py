@@ -1054,11 +1054,12 @@ def join_set_similarity(spark, sf_dir):
     token may sit anywhere), so when the vocabulary is small every
     posting is corpus-sized and candidates degenerate quadratic
     (measured: 17 s for 394k true pairs at the perturbed sf1 campaign
-    corpus).  When the whole vocabulary fits 1024 bits and the PROBE
-    matrix fits the staging budget, route to the bitset GEMM kernel:
-    probes broadcast as a P×|V| incidence matrix, the corpus STREAMS
-    map-only through mapInPandas — no shuffle at all, cost O(corpus·P)
-    integer-exact GEMM cells (blockkernel.bitset_gemm_pairs)."""
+    corpus).  When the whole vocabulary fits 1024 bits, route to the
+    bitset GEMM kernel (blockkernel.bitset_gemm_pairs): within the
+    driver staging budget the probes broadcast as a P×|V| incidence
+    matrix and the corpus STREAMS map-only through mapInPandas — no
+    shuffle at all, cost O(corpus·P) integer-exact GEMM cells; past it
+    the same cells run on blockkernel.block_join's bucket grid."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_distinct(F.split(F.lower(F.col("text")), " ")).alias("toks"),
