@@ -67,11 +67,13 @@ def block_join(
     from_rows,
     score,
     schema,
-    spread=False,
     finish=None,
 ):
     """Score every ``stream_df`` row against the whole of ``index_df`` on
-    the path ``n_buckets(need_bytes)`` picks.
+    the path ``n_buckets(need_bytes)`` picks.  The staged path
+    repartitions the stream to ``spread_width`` before the map, so the
+    kernel runs one task per core (a single-file scan is one task
+    otherwise); the grid's cogroup exchange spreads it already.
 
     Args:
       stream_df, index_df: DataFrames with the same columns; ``key`` is a
@@ -85,9 +87,6 @@ def block_join(
       score: ``(stream_pdf, value) -> iterator of pandas frames`` matching
         ``schema``; THE one scoring definition of both paths.
       schema: output DDL schema.
-      spread: repartition the stream side to ``spread_width`` before the
-        map (staged path; a single-file scan is one task otherwise).  The
-        grid's cogroup exchange spreads it already.
       finish: ``DataFrame -> DataFrame`` applied to the grid path's output
         only: a cell sees 1/B of the index side, so a per-stream-row
         selection (kNN's top-k) needs one global merge after the cells.
@@ -107,9 +106,9 @@ def block_join(
                 if len(pdf):
                     yield from score(pdf, value)
 
-        if spread:
-            stream_df = stream_df.repartition(spread_width(spark))
-        return stream_df.mapInPandas(kernel, schema)
+        return stream_df.repartition(spread_width(spark)).mapInPandas(
+            kernel, schema
+        )
 
     import pyspark.sql.functions as F
 
@@ -356,7 +355,6 @@ def bitset_gemm_pairs(
     metric,
     tau,
     pair_mask=None,
-    spread=False,
 ):
     """All qualifying (stream, index) set-intersection pairs via a dense
     0/1 GEMM block kernel — the degenerate-vocabulary twin of the
@@ -413,7 +411,6 @@ def bitset_gemm_pairs(
         arrays; only pairs it keeps leave the kernel.  Self-joins pass
         ``operator.ne`` (directional: drop each doc against itself) or
         ``operator.lt`` (symmetric: each unordered pair once).
-      spread: ``block_join``'s staged-path stream spread.
 
     Returns a DataFrame (sid long, iid long, n_common long, metric
     double); callers rename/reorder/cast to their output contract.
@@ -463,7 +460,6 @@ def bitset_gemm_pairs(
             pair_mask=pair_mask,
         ),
         schema="sid long, iid long, n_common long, metric double",
-        spread=spread,
     )
 
 

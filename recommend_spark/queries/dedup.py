@@ -203,10 +203,11 @@ def _kernel_self_pairs(parts, metric, tau, pair_mask, min_nt=0):
     bitset GEMM kernel (blockkernel.bitset_gemm_pairs: staged map-only
     within the driver budget, the bucket grid past it).  Docs with fewer
     than ``min_nt`` tokens sit on the index side only; ``pair_mask``
-    picks which (stream, index) id pairs leave the kernel.  The stream is
-    re-spread to the core count: one Python task per tokenize partition
-    (32) costs more than the kernel on a small corpus (sf0.01 word
-    pairs, local[4]: ~1.3 s against ~0.4 s to run the kernel).  Returns
+    picks which (stream, index) id pairs leave the kernel.  The staged
+    path re-spreads the stream to the core count (block_join): one Python
+    task per tokenize partition (32) costs more than the kernel on a
+    small corpus (sf0.01, local[4]: word pairs ~1.3 s against ~0.4 s,
+    containment repeat builds 2.1-3.4 s against 1.1-1.7 s).  Returns
     (doc_a, doc_b, n_common int, <metric> double)."""
     st = parts["stats"]
     side = parts["d"].select(F.col("doc_id").alias("id"), "nt", "toks")
@@ -219,7 +220,6 @@ def _kernel_self_pairs(parts, metric, tau, pair_mask, min_nt=0):
         metric=metric,
         tau=tau,
         pair_mask=pair_mask,
-        spread=True,
     ).select(
         F.col("sid").alias("doc_a"),
         F.col("iid").alias("doc_b"),
@@ -961,7 +961,6 @@ def dedup_embed_cosine(spark, sf_dir):
         from_rows=embeddings_from_rows,
         score=pairs_score,
         schema="vec_a long, vec_b long, cosine double",
-        spread=True,
     )
 
 

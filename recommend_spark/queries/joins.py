@@ -1149,7 +1149,6 @@ def _set_similarity_pairs(
                 n_index_toks=n_ptoks,
                 metric="jaccard",
                 tau=_SSJ_TAU,
-                spread=True,
             )
             return pairs.select(
                 F.col("iid").alias("probe_id"),

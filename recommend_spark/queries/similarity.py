@@ -668,7 +668,6 @@ def sim_knn_join(spark, sf_dir):
         from_rows=embeddings_from_rows,
         score=knn_score,
         schema="query_id long, neighbor_id long, cosine double",
-        spread=True,
         finish=global_topk,
     )
 

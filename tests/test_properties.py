@@ -246,12 +246,14 @@ def test_triangle_degree_orientation_bounds_out_degree(spark):
     assert tri == 1
 
 
-def test_containment_prefix_path_matches_brute_force(spark):
+def test_containment_prefix_path_matches_brute_force(spark, monkeypatch):
     """The web-scale one-sided prefix pipeline must return EXACTLY the
     brute-force containment pairs on a corpus whose vocabulary (>1024
-    tokens) defeats the bitmask fast path."""
+    tokens) defeats the bitmask fast path.  Its signature rescore joins
+    both sides under size-gated broadcast hints (_sig_rescore)."""
     import random
 
+    from recommend_spark import io
     from recommend_spark.queries.dedup import (
         _CONTAIN_MIN_TOKENS,
         _CONTAIN_TAU,
@@ -293,6 +295,26 @@ def test_containment_prefix_path_matches_brute_force(spark):
                 want.add((a, b, inter))
     assert want, "fixture must contain at least one qualifying pair"
     assert got == want
+    _assert_sig_rescore_hints(out, lambda: _containment_pairs(df), monkeypatch, io)
+
+
+def _assert_sig_rescore_hints(out, rebuild, monkeypatch, io):
+    """Pin the prefix paths' rescore plan: both signature sides carry a
+    broadcast hint within ``io.BROADCAST_HINT_BUDGET``, and with the
+    budget at 0 exactly those two hints go while the rows stay the
+    same."""
+
+    def hints(d):
+        return d._jdf.queryExecution().optimizedPlan().toString().count(
+            "strategy=broadcast"
+        )
+
+    hinted = hints(out)
+    assert hinted >= 2
+    monkeypatch.setattr(io, "BROADCAST_HINT_BUDGET", 0)
+    gated = rebuild()
+    assert hints(gated) == hinted - 2
+    assert sorted(map(tuple, gated.collect())) == sorted(map(tuple, out.collect()))
 
 
 def test_containment_replica_collapse_matches_direct(spark):
@@ -1225,11 +1247,13 @@ def test_jaccard_kernel_matches_brute_force_staged_and_grid(spark, monkeypatch):
     assert grid == want
 
 
-def test_jaccard_prefix_path_matches_brute_force(spark):
+def test_jaccard_prefix_path_matches_brute_force(spark, monkeypatch):
     """A >1024-token vocabulary keeps _jaccard_pairs_exact on the PPJoin
-    prefix filter (no kernel), with the same exact pairs."""
+    prefix filter (no kernel), with the same exact pairs and the
+    size-gated broadcast rescore."""
     import random
 
+    from recommend_spark import io
     from recommend_spark.queries.dedup import _jaccard_pairs_exact
 
     rng = random.Random(43)
@@ -1240,9 +1264,11 @@ def test_jaccard_prefix_path_matches_brute_force(spark):
     want = _jaccard_brute_force(docs)
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    plan, got = _jaccard_run(_jaccard_pairs_exact(df))
+    out = _jaccard_pairs_exact(df)
+    plan, got = _jaccard_run(out)
     assert "MapInPandas" not in plan
     assert got == want
+    _assert_sig_rescore_hints(out, lambda: _jaccard_pairs_exact(df), monkeypatch, io)
 
 
 def test_minhash_banded_rescore_broadcast_gate(spark, monkeypatch):
